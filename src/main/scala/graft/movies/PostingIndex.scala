@@ -3,6 +3,7 @@ package graft.movies
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 import graft.ops.Checkpointer._
 
 /** Inverted-index search serving: BM25F over a CANDIDATE set found by a
@@ -128,6 +129,22 @@ final class PostingIndex private (
     if (layoutV == 0) s"$dir/dfstats" else s"$dir/dfstats-$layoutV"
   private def deltaPath = new Path(dir, "delta")
 
+  /** The base layout's footer schema, inferred ONCE per handle: an
+    * inferring parquet read launches a footer job, and one maintenance
+    * op or serve reads the base several times. A handle's layout never
+    * changes its columns (compact publishes a new layout under a new
+    * handle; refresh appends the same columns), so the schema is safe
+    * to keep for the handle's life.
+    */
+  private lazy val baseSchema: StructType =
+    spark.read.parquet(docsPath).schema
+
+  /** A fresh read of the base layout under [[baseSchema]] — current
+    * file listing, no schema-inference job.
+    */
+  private def readBase(): DataFrame =
+    spark.read.schema(baseSchema).parquet(docsPath)
+
   private def fs = new Path(dir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -226,8 +243,8 @@ final class PostingIndex private (
     * GROWING tick times between compactions.
     *
     * The read carries an EXPLICIT schema (the analyzed doc columns +
-    * __seq/__op, derived from the base layout's own footer — a
-    * driver-side read, no job) instead of mergeSchema: a mergeSchema
+    * __seq/__op, derived from [[baseSchema]], the base footer the
+    * handle reads once) instead of mergeSchema: a mergeSchema
     * read launches a distributed footer-merge JOB on every call, and
     * this is called several times per maintenance op / serve —
     * measured ~20 pure-planning jobs per q293 run (guide §2.4, fewer
@@ -237,8 +254,7 @@ final class PostingIndex private (
     * unionByName(allowMissingColumns) against the zero seed produced.
     */
   private def deltaAll(segs: Seq[Seg]): DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    val zero = spark.read.parquet(docsPath).limit(0)
+    val zero = readBase().limit(0)
       .select(analyzedCols: _*)
       .withColumn(SeqCol, lit(-1L)).withColumn(OpCol, lit("u"))
     // every field nullable: tombstone segments materialize the doc
@@ -291,7 +307,7 @@ final class PostingIndex private (
           .distinct().collect().map(_.getInt(0)).toSeq
         if (buckets.isEmpty) None
         else {
-          val pruned = spark.read.parquet(docsPath)
+          val pruned = readBase()
             .filter(col(DocBucketCol).isin(buckets: _*))
             .join(ids, Seq(idCol), "left_semi")
             .select(analyzedCols: _*)
@@ -303,7 +319,7 @@ final class PostingIndex private (
       .map(_.join(ids, Seq(idCol), "left_semi"))
     (base.toSeq ++ delta.toSeq)
       .reduceOption(_ unionByName _)
-      .getOrElse(spark.read.parquet(docsPath).limit(0)
+      .getOrElse(readBase().limit(0)
         .select(analyzedCols: _*))
   }
 
@@ -314,7 +330,7 @@ final class PostingIndex private (
     * exactly what the serve's touched-id anti-join suppresses.
     */
   private def baseVersionsOf(ids: DataFrame): DataFrame = {
-    def empty = spark.read.parquet(docsPath).limit(0)
+    def empty = readBase().limit(0)
       .select(analyzedCols: _*)
     if (baseIsPlaceholder) empty
     else {
@@ -322,7 +338,7 @@ final class PostingIndex private (
         .select(pmod(xxhash64(col(idCol)), lit(nDocBuckets)).cast("int"))
         .distinct().collect().map(_.getInt(0)).toSeq
       if (buckets.isEmpty) empty
-      else spark.read.parquet(docsPath)
+      else readBase()
         .filter(col(DocBucketCol).isin(buckets: _*))
         .join(ids, Seq(idCol), "left_semi")
         .select(analyzedCols: _*)
@@ -361,7 +377,7 @@ final class PostingIndex private (
     * the browse/compaction view. O(base + delta log).
     */
   private def currentDocsView(segs: Seq[Seg]): DataFrame = {
-    val base0 = spark.read.parquet(docsPath).select(analyzedCols: _*)
+    val base0 = readBase().select(analyzedCols: _*)
     val base = touchedIds(segs).fold(base0)(t =>
       base0.join(broadcast(t), Seq(idCol), "left_anti"))
     currentDeltaDocs(segs).fold(base)(base.unionByName(_))
@@ -427,7 +443,7 @@ final class PostingIndex private (
           .distinct().collect().map(_.getInt(0)).toSeq
         if (candBuckets.isEmpty) None
         else {
-          val pruned = spark.read.parquet(docsPath)
+          val pruned = readBase()
             .filter(col(DocBucketCol).isin(candBuckets: _*))
             .join(candidates, Seq(idCol), "left_semi")
             .select(analyzedCols: _*)
@@ -450,7 +466,7 @@ final class PostingIndex private (
 
   /** Empty result with the exact full-face schema (payload + score). */
   private def emptyScored(): DataFrame =
-    spark.read.parquet(docsPath).limit(0)
+    readBase().limit(0)
       .withColumn("score", lit(0.0)).filter(col("score") > 0)
       .select(outCols: _*)
 
@@ -537,7 +553,7 @@ final class PostingIndex private (
     // candidate id-buckets: bounded by nDocBuckets, prunes the doc scan
     val candBuckets = statRows
       .flatMap(_.getSeq[Int](2)).distinct.toSeq
-    val pruned = spark.read.parquet(docsPath)
+    val pruned = readBase()
       .filter(col(DocBucketCol).isin(candBuckets: _*))
       .join(candidates, Seq(idCol), "left_semi")
     pruned
@@ -741,7 +757,7 @@ final class PostingIndex private (
         else if (candRows.length <= PostingIndex.CandIdPushdownCap) {
           val buckets = candRows.map(_.getInt(1)).distinct.toSeq
           val ids = candRows.map(_.get(0)).toSeq
-          Some(spark.read.parquet(docsPath)
+          Some(readBase()
             .filter(col(DocBucketCol).isin(buckets: _*) &&
               col(idCol).isin(ids: _*)))
         } else {
@@ -750,7 +766,7 @@ final class PostingIndex private (
             .select(pmod(xxhash64(col(idCol)), lit(nDocBuckets))
               .cast("int"))
             .distinct().collect().map(_.getInt(0)).toSeq
-          Some(spark.read.parquet(docsPath)
+          Some(readBase()
             .filter(col(DocBucketCol).isin(candBuckets: _*))
             .join(candidates, Seq(idCol), "left_semi"))
         }
@@ -849,7 +865,7 @@ final class PostingIndex private (
           if (candBuckets.isEmpty) None
           else Some((
             posts.select(col("term"), col(idCol)),
-            spark.read.parquet(docsPath)
+            readBase()
               .filter(col(DocBucketCol).isin(candBuckets: _*))
               .join(candidates, Seq(idCol), "left_semi")
               .select(analyzedCols: _*)))
@@ -943,7 +959,7 @@ final class PostingIndex private (
   private def emptyScoredMulti(
       queries: DataFrame, queryIdCol: String): DataFrame =
     queries.limit(0).select(col(queryIdCol))
-      .crossJoin(spark.read.parquet(docsPath).limit(0)
+      .crossJoin(readBase().limit(0)
         .withColumn("score", lit(0.0)).select(outCols: _*))
 
   /** BATCHED top-k serving with per-query MAX-SCORE pruning — the
@@ -1230,6 +1246,14 @@ final class PostingIndex private (
     require(docs.columns.toSeq == docCols,
       s"batch columns ${docs.columns.toSeq} must match the built " +
         s"corpus's $docCols")
+    // type drift trips here, not later as an opaque parquet decode
+    // error when a serve reads the segment under the base's schema
+    docCols.foreach { c =>
+      val (got, want) = (docs.schema(c).dataType, baseSchema(c).dataType)
+      require(PostingIndex.nullable(got) == PostingIndex.nullable(want),
+        s"batch column '$c' has type ${got.simpleString} but the built " +
+          s"corpus stores ${want.simpleString}")
+    }
     require(!docCols.contains(SeqCol) && !docCols.contains(OpCol),
       s"$SeqCol/$OpCol are reserved segment columns")
     requireCurrent()
@@ -1529,6 +1553,18 @@ object PostingIndex {
     * semi-join fetch.
     */
   val CandIdPushdownCap = 8192
+
+  /** `t` with every nullability flag set: a parquet read widens them,
+    * so only the shape and the leaf types of a batch and the stored
+    * base are comparable.
+    */
+  private[movies] def nullable(t: DataType): DataType = t match {
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), true)
+    case StructType(fs) =>
+      StructType(fs.map(f => StructField(f.name, nullable(f.dataType))))
+    case other => other
+  }
 
   /** `seg-<n>-<op>` parsed DEFENSIVELY (ADVICE r11): a foreign or
     * malformed `seg-*` entry in delta/ is None — non-live debris that

@@ -12,7 +12,9 @@ import graft.cdc.DocSink
   * serving incrementally — O(|batch| + touched buckets + delta log)
   * per tick, never O(corpus) (CdcSpec drills the composition:
   * update-then-search, replay absorption, ≡ rebuild over the final
-  * store).
+  * store). The pipeline's tick is fused per target: however many
+  * processes fed the movies index, a tick makes ONE [[upsert]] here,
+  * so the delta log grows by one segment per consuming tick.
   *
   * The functional index handle is rebound on every write (single
   * writer, the parquet-sink family contract); [[index]] exposes the

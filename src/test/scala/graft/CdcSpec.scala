@@ -91,11 +91,15 @@ class CdcSpec extends SparkTestBase {
     assert(p2.getString(1) === "Mark R. Hamill")
   }
 
+  // also covers the person doc's film_ids and roles
   test("bridge-row insert (created_at only) regenerates the film doc") {
     val dir = tmp(); seed(dir)
     val sinks = mkSinks(dir)
     val cursors = new Keyset.CursorStore(s"$dir/cursors")
     CdcPipeline.drain(spark, tables(dir), sinks, cursors, batchSize = 10)
+    def p1() = sinks.persons.read().get.filter($"id" === "p1")
+      .select($"film_ids", $"roles").as[(Seq[String], Seq[String])].head()
+    assert(p1() === ((Seq("f1"), Seq("director"))))
 
     // cast p1 as actor on f2 via a new bridge row
     writeTable(dir, "person_film_work", Seq(
@@ -108,6 +112,127 @@ class CdcSpec extends SparkTestBase {
     val f2 = sinks.movies.read().get.filter($"id" === "f2").head
     assert(f2.getSeq[String](f2.fieldIndex("actors_names")) ===
       Seq("George Lucas"))
+    assert(p1() === ((Seq("f1", "f2"), Seq("actor", "director"))))
+  }
+
+  test("a film retitle refreshes the genre doc's filmworks") {
+    val dir = tmp(); seed(dir)
+    val sinks = mkSinks(dir)
+    val cursors = new Keyset.CursorStore(s"$dir/cursors")
+    CdcPipeline.drain(spark, tables(dir), sinks, cursors, batchSize = 10)
+    def titles() = sinks.genres.read().get.filter($"id" === "g1")
+      .select($"filmworks.title").as[Seq[String]].head()
+    assert(titles() === Seq("Star Wars"))
+
+    writeTable(dir, "film_work", Seq(
+      ("f1", "Galactic Saga", "Space opera", 8.6, ts(100), ts(250)),
+      ("f2", "Quiet Film", "Slow burn", 6.0, ts(100), ts(100))
+    ).toDF("id", "title", "description", "rating", "created_at", "updated_at"))
+    CdcPipeline.drain(spark, tables(dir), sinks, cursors, batchSize = 10)
+    assert(titles() === Seq("Galactic Saga"))
+  }
+
+  test("drain throws, naming the pending processes, when its last " +
+       "allowed tick still consumed rows; the default drain does not") {
+    val dir = tmp(); seed(dir)
+    val e = intercept[IllegalStateException] {
+      CdcPipeline.drain(spark, tables(dir), mkSinks(dir),
+        new Keyset.CursorStore(s"$dir/cursors"), batchSize = 1, maxTicks = 1)
+    }
+    assert(e.getMessage.contains("film_work.movies"), e.getMessage)
+    assert(e.getMessage.contains("person.persons"), e.getMessage)
+    val fresh = tmp(); seed(fresh)
+    CdcPipeline.drain(spark, tables(fresh), mkSinks(fresh),
+      new Keyset.CursorStore(s"$fresh/cursors"))
+  }
+
+  test("fused tick: a change to all five tables makes ONE upsert per " +
+       "target; the search index gains one delta segment per consuming " +
+       "tick and ends equal to a rebuild over the final tables") {
+    import graft.movies.{Docs, PostingIndex, PostingIndexSink}
+    final class CountingSink(inner: DocSink) extends DocSink {
+      var upserts = 0
+      def idCol: String = inner.idCol
+      def upsert(docs: DataFrame): Unit = { upserts += 1; inner.upsert(docs) }
+      def delete(ids: DataFrame): Unit = inner.delete(ids)
+      def read(): Option[DataFrame] = inner.read()
+    }
+    val dir = tmp(); seed(dir)
+    val t = tables(dir)
+    val shape = Docs.movieDocs(t.filmWork(), t.person(), t.genre(),
+      t.personFilmWork(), t.genreFilmWork()).limit(0)
+    val idxSink = new PostingIndexSink(PostingIndex.build(
+      shape, s"$dir/search_idx", nTermBuckets = 4, nDocBuckets = 4))
+    val plain = mkSinks(dir)
+    val counted = Seq(idxSink, plain.persons, plain.genres).map(new CountingSink(_))
+    val sinks = CdcPipeline.Sinks(counted(0), counted(1), counted(2))
+    def upserts() = counted.map(_.upserts)
+    def segments() = Option(new java.io.File(s"$dir/search_idx/delta")
+      .listFiles()).toSeq.flatten.count(_.getName.startsWith("seg-"))
+    val cursors = new Keyset.CursorStore(s"$dir/cursors")
+    CdcPipeline.drain(spark, t, sinks, cursors, batchSize = 10)
+    assert(upserts() === Seq(1, 1, 1))
+    assert(segments() === 1)
+
+    writeTable(dir, "film_work", Seq(
+      ("f1", "Galactic Saga", "Space opera", 8.6, ts(100), ts(200)),
+      ("f2", "Quiet Film", "Slow burn", 6.0, ts(100), ts(100))
+    ).toDF("id", "title", "description", "rating", "created_at", "updated_at"))
+    writeTable(dir, "person", Seq(
+      ("p1", "George Lucas", ts(100), ts(100)),
+      ("p2", "Mark R. Hamill", ts(100), ts(200))
+    ).toDF("id", "full_name", "created_at", "updated_at"))
+    writeTable(dir, "genre", Seq(
+      ("g1", "Science Fiction", ts(100), ts(200))
+    ).toDF("id", "name", "created_at", "updated_at"))
+    writeTable(dir, "person_film_work", Seq(
+      ("pfw1", "f1", "p1", "director", ts(100)),
+      ("pfw2", "f1", "p2", "actor", ts(100)),
+      ("pfw3", "f2", "p1", "actor", ts(200))
+    ).toDF("id", "film_work_id", "person_id", "role", "created_at"))
+    writeTable(dir, "genre_film_work", Seq(
+      ("gfw1", "f1", "g1", ts(100)),
+      ("gfw2", "f2", "g1", ts(200))
+    ).toDF("id", "film_work_id", "genre_id", "created_at"))
+
+    val res = CdcPipeline.tick(spark, t, sinks, cursors, batchSize = 10)
+    assert(res.values.forall(_.consumed), res)
+    assert(upserts() === Seq(2, 2, 2))
+    assert(segments() === 2)
+    // docsWritten is the count of the process's target
+    assert(res("person.movies").docsWritten === 2L)
+    assert(res("genre_film_work.genres").docsWritten === 1L)
+    val idle = CdcPipeline.tick(spark, t, sinks, cursors, batchSize = 10)
+    assert(!idle.values.exists(_.consumed))
+    assert(upserts() === Seq(2, 2, 2))
+    assert(segments() === 2)
+
+    def docSet(df: DataFrame) = df
+      .select($"id", to_json(struct(col("*"))).as("doc"))
+      .as[(String, String)].collect().sortBy(_._1).toSeq
+    assert(docSet(idxSink.read().get) === docSet(Docs.movieDocs(t.filmWork(),
+      t.person(), t.genre(), t.personFilmWork(), t.genreFilmWork())))
+    assert(docSet(sinks.persons.read().get) ===
+      docSet(Docs.personDocs(t.person(), t.personFilmWork())))
+    assert(docSet(sinks.genres.read().get) ===
+      docSet(Docs.genreDocs(t.genre(), t.filmWork(), t.genreFilmWork())))
+  }
+
+  test("PostingIndex.upsert rejects a batch whose column type drifted " +
+       "from the built corpus, naming the column") {
+    import graft.movies.{Docs, PostingIndex}
+    val dir = tmp(); seed(dir)
+    val t = tables(dir)
+    val docs = Docs.movieDocs(t.filmWork(), t.person(), t.genre(),
+      t.personFilmWork(), t.genreFilmWork())
+    val idx = PostingIndex.build(docs, s"$dir/search_idx",
+      nTermBuckets = 4, nDocBuckets = 4)
+    val drifted = docs.filter($"id" === "f1")
+      .withColumn("imdb_rating", $"imdb_rating".cast("string"))
+    val e = intercept[IllegalArgumentException](idx.upsert(drifted))
+    assert(e.getMessage.contains("'imdb_rating'"), e.getMessage)
+    // the same batch at the stored types lands
+    assert(idx.upsert(docs.filter($"id" === "f1")).numDocs === 2L)
   }
 
   test("keyset cursor: equal-timestamp rows straddling a batch boundary " +

@@ -8,8 +8,9 @@ import graft.movies.{Docs, Ingest, Schemas}
 /** CDC over the REAL golden corpus: ingest the 1000-movie legacy data,
   * persist the normalized tables, drain the incremental pipeline from a
   * cold start, and require the movies index to equal the direct batch
-  * denormalization — the incremental path must converge to the batch
-  * answer on real data, not just fixtures.
+  * denormalization (and the persons and genres indexes theirs) — the
+  * incremental path must converge to the batch answer on real data,
+  * not just fixtures.
   */
 class GoldenCdcSpec extends SparkTestBase {
 
@@ -55,5 +56,14 @@ class GoldenCdcSpec extends SparkTestBase {
     assert(sinks.persons.read().get.count() ===
       tables.person().count())
     assert(sinks.genres.read().get.count() === tables.genre().count())
+    // persons and genres equal their batch denorm too
+    for ((store, want) <- Seq(
+        sinks.persons -> Docs.personDocs(tables.person(), tables.personFilmWork()),
+        sinks.genres -> Docs.genreDocs(tables.genre(), tables.filmWork(),
+          tables.genreFilmWork()))) {
+      val got = store.read().get
+      assert(got.exceptAll(want).count() === 0)
+      assert(want.exceptAll(got).count() === 0)
+    }
   }
 }
