@@ -9,12 +9,13 @@ import java.nio.file.Files
   * tunables (daemon.py:397-400, `--pg-batch`/`--es-batch` default
   * 1000) and report events/s —
   *
-  *  - `batch_loop`: the q149 end-to-end shape — Keyset.nextBatch →
-  *    latest-per-key reduce → UpsertSink bucket rewrite per tick
-  *    (source + transform + sink, the full pipeline rate);
-  *  - `log_sink`: the same loop over [[graft.cdc.LogUpsertSink]] —
+  *  - `log_sink`: the q149 end-to-end shape — Keyset.nextBatch →
+  *    latest-per-key reduce → [[graft.cdc.LogUpsertSink]] upsert per
+  *    tick (source + transform + sink, the full pipeline rate);
   *    append-only segments, O(|batch|) per tick by construction;
   *    compaction every 50 ticks is included in the total;
+  *  - `search_index` / `ann_index`: the same loop maintaining an
+  *    updatable search / IVF×PQ index through its DocSink face;
   *  - `es_wire`: the same loop over [[graft.cdc.EsWire.EsDocSink]]
   *    POSTing real `_bulk` bodies from executors to an in-process
   *    [[graft.cdc.EsStub]] — the doc-level sink the O(store) analysis
@@ -24,11 +25,11 @@ import java.nio.file.Files
   *    micro-batch stream appending to a parquet file sink under a real
   *    streaming checkpoint (source-side sustained rate).
   *
-  * Each batch-loop face also reports `tick_ratio`: mean duration of
-  * its last quarter of ticks over its first quarter — ≈1 means
-  * per-tick cost is FLAT in store size (the log sink's design
-  * property); the UpsertSink's ratio grows with the store (the
-  * documented O(affected buckets)→O(store) trade-off on uniform keys).
+  * Each batch-loop face also reports `tick_ratio`: median duration of
+  * its last quarter of ticks over its second quarter (`tickRatio`) —
+  * ≈1 means per-tick cost is FLAT in store size (the log sink's design
+  * property). The `*_hikey` faces key by the unique event id, so their
+  * stores grow to the full row count across the drain.
   *
   * Prints one JSON line and writes `_streambench.json`; recorded in
   * BASELINE.md. Every path asserts it drained exactly the table's row
@@ -99,15 +100,6 @@ object StreamBench {
     def requireStoreComplete(count: Long, face: String): Unit =
       require(count == users,
         s"$face holds $count of $users latest-per-key docs")
-
-    def upsertFace(batchSize: Int): (Double, Vector[Double]) = {
-      val tmp = Files.createTempDirectory("graft_sb_loop").toString
-      val store = new graft.cdc.UpsertSink(
-        spark, s"$tmp/store", "user_id", nBuckets = 32)
-      val r = drainLoop(batchSize, store)
-      requireStoreComplete(store.read().get.count(), "upsert_sink")
-      r
-    }
 
     def logFace(batchSize: Int): (Double, Vector[Double]) = {
       val tmp = Files.createTempDirectory("graft_sb_log").toString
@@ -199,18 +191,10 @@ object StreamBench {
       s""""${r._1}":{"sec":${r._2},""" +
         s""""events_per_sec":${(total / r._2).toLong}}"""
 
-    // the STORE-GROWTH contrast: keyed by the unique event id the doc
-    // store grows to the full row count across the drain (vs the
-    // bounded user_id key domain), so an O(store)-per-tick sink's
-    // tick_ratio rises through the run while the log sink's stays ~1
-    def upsertHiKey(batchSize: Int): (Double, Vector[Double]) = {
-      val tmp = Files.createTempDirectory("graft_sb_hik_u").toString
-      val store = new graft.cdc.UpsertSink(
-        spark, s"$tmp/store", "did", nBuckets = 32)
-      val r = drainLoop(batchSize, store, keyCol = "did")
-      require(store.read().get.count() == total, "hikey upsert store")
-      r
-    }
+    // STORE GROWTH: keyed by the unique event id the doc store grows
+    // to the full row count across the drain (vs the bounded user_id
+    // key domain); an O(store)-per-tick sink's tick_ratio would rise
+    // through the run, the log sink's stays ~1
     def logHiKey(batchSize: Int): (Double, Vector[Double]) = {
       val tmp = Files.createTempDirectory("graft_sb_hik_l").toString
       val store = new graft.cdc.LogUpsertSink(
@@ -337,19 +321,16 @@ object StreamBench {
       r
     }
 
-    val loops = batches.map(b => b -> upsertFace(b))
     val logs = batches.map(b => b -> logFace(b))
     val sidx = batches.map(b => b -> searchIndexFace(b))
     val aidx = batches.map(b => b -> annIndexFace(b))
     val es = batches.map(b => b -> esFace(b))
     val streams = batches.map(b => b -> dsv2(b))
     val hik = Seq(
-      "batch_loop_hikey" -> (1000 -> upsertHiKey(1000)),
       "log_sink_hikey" -> (1000 -> logHiKey(1000)),
       "search_index_hikey" -> (1000 -> searchIndexHiKey(1000)))
     val json =
       s"""{"metric":"cdc_throughput","rows":$total,"keys":$users,""" +
-        s""""batch_loop":{${loops.map(fmtTicks).mkString(",")}},""" +
         s""""log_sink":{${logs.map(fmtTicks).mkString(",")}},""" +
         s""""search_index":{${sidx.map(fmtTicks).mkString(",")}},""" +
         s""""ann_index":{${aidx.map(fmtTicks).mkString(",")}},""" +

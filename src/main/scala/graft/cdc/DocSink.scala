@@ -10,16 +10,11 @@ import org.apache.spark.sql.DataFrame
   * this).
   *
   * Implementations:
-  *  - [[UpsertSink]] (default): bucketed-parquet native store; rewrites
-  *    only affected buckets per upsert/delete (dynamic overwrite).
-  *  - [[ManifestUpsertSink]] (crash-safe): snapshot-commit storage —
-  *    staged batches, immutable commit dirs, versioned manifests,
-  *    retention window for lagging readers; same O(affected buckets)
-  *    cost, no mutate-in-place crash window.
-  *  - [[LogUpsertSink]] (O(|batch|) per tick): append-only log
-  *    segments + latest-per-key read view + scheduled compaction —
-  *    the sustained-ingest shape (StreamBench: ~5× the rewrite sinks
-  *    at the reference's own batch sizes).
+  *  - [[LogUpsertSink]] (the file-backed store, O(|batch|) per tick):
+  *    append-only log segments + latest-per-key read view + scheduled
+  *    compaction; crash-safe by Spark's `_SUCCESS` commit marker.
+  *  - [[graft.movies.PostingIndexSink]] / [[graft.ops.IvfPqIndexSink]]:
+  *    the store IS an updatable search / vector index.
   *  - [[EsWire.EsDocSink]] (live wire): POSTs the q267-checked
   *    [[EsBulk]] `_bulk` bodies over HTTP from executors, with the
   *    reference's backoff/partial-failure semantics — drilled in
@@ -48,22 +43,22 @@ import org.apache.spark.sql.DataFrame
   * Single writer + stale-handle tripwire: the parquet sinks are
   * single-writer stores, and a SUPERSEDED handle (one whose store was
   * advanced by a newer writer — split brain) must refuse to mutate:
-  * it could sweep segments the newer writer published or publish a
-  * manifest that orphans newer commits. [[LogUpsertSink]] and
-  * [[ManifestUpsertSink]] verify their remembered store version
-  * (highest seq / manifest version) against disk before every mutating
-  * op and trip a loud require — the PostingIndex `requireCurrent`
-  * contract applied to the sink family (SinkPropertySpec asserts the
-  * trip). Re-OPENING a handle (a restart) snapshots the current
-  * version and proceeds normally.
+  * it could sweep segments the newer writer published.
+  * [[LogUpsertSink]] verifies its remembered store version (highest
+  * published seq) against disk before every mutating op and trips a
+  * loud require — the PostingIndex `requireCurrent` contract applied
+  * to the sink family (SinkPropertySpec asserts the trip). Re-OPENING
+  * a handle (a restart) snapshots the current version and proceeds
+  * normally.
   *
   * Retries: the reference wraps every connector call in an
   * exponential-backoff decorator (postgres_to_es/utils.py:19-53).
   * Executor-side transient faults are already covered by Spark task
   * retries; for driver-visible connector failures wrap sink calls in
-  * `JdbcIO.withRetry` — safe precisely BECAUSE this contract is
-  * idempotent upsert-by-id, so a partially-applied failed attempt
-  * replays harmlessly.
+  * `JdbcIO.withRetry` (LogUpsertSink's `retry` option does exactly
+  * that) — safe precisely BECAUSE this contract is idempotent
+  * upsert-by-id, so a partially-applied failed attempt replays
+  * harmlessly.
   */
 trait DocSink {
 

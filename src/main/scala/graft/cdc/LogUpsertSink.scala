@@ -4,18 +4,17 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Log-structured [[DocSink]]: O(|batch|) per tick, ALWAYS — the same
-  * idempotent upsert-by-id contract as [[UpsertSink]] (reference
+/** Log-structured [[DocSink]], the file-backed doc store: O(|batch|)
+  * per tick, ALWAYS — the idempotent upsert-by-id contract (reference
   * semantics: postgres_to_es/daemon.py:358-381), but a write never
   * reads or rewrites the store.
   *
-  * Why: both bucketed-rewrite sinks ([[UpsertSink]],
-  * [[ManifestUpsertSink]]) pay O(affected buckets) per tick, which the
-  * round-9 StreamBench readout showed degenerates to O(store) once a
-  * uniform-key batch touches every bucket (388 ev/s at batch 1000).
-  * This sink appends each batch as an immutable log segment and defers
-  * the merge to the READ (log-compaction view) and to an explicit
-  * [[compact]]:
+  * Why: a bucketed-rewrite store pays O(affected buckets) per tick,
+  * which the round-9 StreamBench readout showed degenerates to
+  * O(store) once a uniform-key batch touches every bucket (388 ev/s at
+  * batch 1000). This sink appends each batch as an immutable log
+  * segment and defers the merge to the READ (log-compaction view) and
+  * to an explicit [[compact]]:
   *
   *   dir/log/seg-<n>-u/   one upsert batch (+ constant __seq, __op)
   *   dir/log/seg-<n>-d/   one delete batch: distinct ids (+ meta)
@@ -43,7 +42,7 @@ import org.apache.spark.sql.functions._
   * read() costs O(base + log) with one key shuffle; schedule
   * [[compact]] to bound the log (cost: one base+log pass, amortized
   * across the ticks between compactions). Single writer, like the
-  * other parquet sinks; readers materialize before the next compact.
+  * index sinks; readers materialize before the next compact.
   * Pass a [[WriterLease]] to make the single-writer contract
   * PREVENTIVE (a superseded writer aborts before paying any op work)
   * on top of the detective stale-handle tripwire (VERDICT r13 #5).
@@ -76,7 +75,10 @@ final class LogUpsertSink(
     * segment dir that is MARKERLESS (death mid-write) or marked but
     * DATALESS (an empty batch's marker landed but the crash hit before
     * [[writeSegment]]'s cleanup — a dataless dir has no readable
-    * schema, so it must never count as live).
+    * schema, so it must never count as live). An empty batch whose
+    * write left a zero-row part file and then crashed before that
+    * cleanup stays live: it folds to nothing, and the next [[compact]]
+    * folds it away.
     */
   private def segments(sweep: Boolean = false): Seq[Seg] =
     if (!fs.exists(logPath)) Seq.empty
@@ -164,12 +166,24 @@ final class LogUpsertSink(
     val p = new Path(logPath, s"seg-$seq-$op")
     df.withColumn(SeqCol, lit(seq)).withColumn(OpCol, lit(op))
       .write.parquet(p.toString)
-    // an EMPTY batch writes a marker but no data files — such a dir
-    // has no readable schema, so drop it (empty batch == no-op); the
-    // check is a free listing, not a second evaluation of the plan
-    if (!fs.listStatus(p).exists(_.getPath.getName.startsWith("part-")))
+    // an EMPTY batch leaves no part file or (Spark 4) one zero-row part
+    // file that keeps the schema — either way drop the dir (empty batch
+    // == no-op), or an empty upsert on an absent store would read back
+    // as Some(empty). A non-empty write never leaves only a zero-row
+    // file, so just a lone part file needs its footer's row count: a
+    // driver-side read, not a second evaluation of the plan
+    val parts = fs.listStatus(p).map(_.getPath)
+      .filter(_.getName.startsWith("part-"))
+    if (parts.isEmpty || (parts.length == 1 && rowCount(parts.head) == 0L))
       { fs.delete(p, true); false }
     else true
+  }
+
+  private def rowCount(part: Path): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        part, spark.sparkContext.hadoopConfiguration))
+    try r.getRecordCount finally r.close()
   }
 
   /** Upsert `docs` (unique by idCol — enforce upstream): ONE write job,
@@ -192,7 +206,7 @@ final class LogUpsertSink(
 
   /** Tombstone-append delete: absent ids ignored (they tombstone
     * nothing at read), idempotent, O(|batch|). No-op on an absent
-    * store (parity with [[UpsertSink]]).
+    * store.
     */
   def delete(ids: DataFrame): Unit = withSinkRetry {
     requireCurrent()
@@ -251,12 +265,11 @@ final class LogUpsertSink(
   }
 
   def read(): Option[DataFrame] = {
-    // all-tombstoned-uncompacted folds to empty: report None like the
-    // rewrite sinks' emptied stores, so read().isDefined means 'store
-    // has docs' across the family. The emptiness probe costs a
-    // snapshot-fold job, so pay it ONLY when a live tombstone segment
-    // makes emptiness possible at all — the common tombstone-free
-    // read stays job-free here.
+    // all-tombstoned-uncompacted folds to empty: report None like a
+    // compacted emptied store, so read().isDefined means 'store has
+    // docs'. The emptiness probe costs a snapshot-fold job, so pay it
+    // ONLY when a live tombstone segment makes emptiness possible at
+    // all — the common tombstone-free read stays job-free here.
     val mayBeEmpty = segments().exists(_.op == "d")
     snapshotWithMeta().map { case (snap, _, docCols) =>
       snap.select(docCols.map(col): _*)

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -73,10 +72,4 @@ object ShingleHash {
     }
     new GenericArrayData(out)
   }
-
-  def descriptorFor(n: Int): (FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression) = (
-    FunctionIdentifier(s"graft_shingle_hash_$n"),
-    new ExpressionInfo(classOf[ShingleHash].getName, s"graft_shingle_hash_$n"),
-    (children: Seq[Expression]) => ShingleHash(children.head, n))
 }

@@ -1,6 +1,6 @@
 package graft.movies
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Document denormalization: normalized tables → the three index docs.
@@ -106,20 +106,6 @@ object Docs {
         transform(col("genres_ns"), g =>
           struct(g.getField("id").as("id"), g.getField("name").as("name")))
           .as("genres"))
-  }
-
-  /** Typed face of [[movieDocs]] — `Dataset[MovieDocT]` for callers who
-    * want compile-time field safety (the DataFrame face stays primary:
-    * the doc pipeline is schema-driven at the sink boundary).
-    */
-  def movieDocsTyped(
-      filmWork: DataFrame, person: DataFrame, genre: DataFrame,
-      personFilmWork: DataFrame, genreFilmWork: DataFrame,
-      docIds: Option[DataFrame] = None): Dataset[Schemas.MovieDocT] = {
-    val df = movieDocs(filmWork, person, genre,
-      personFilmWork, genreFilmWork, docIds)
-    import df.sparkSession.implicits._
-    df.as[Schemas.MovieDocT]
   }
 
   /** persons index docs (daemon.py:249-293): roles is a distinct set,

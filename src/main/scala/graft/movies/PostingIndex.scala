@@ -84,8 +84,8 @@ import graft.ops.Checkpointer._
   * and publishes via the stats write, so a torn compact leaves debris
   * on one side of the publish, never a broken index. Only bulk
   * [[refresh]] (an in-place base append) means rebuild on a torn
-  * write; the CDC-facing doc stores own the multi-reader crash-atomic
-  * publish ([[graft.cdc.ManifestUpsertSink]]).
+  * write; the CDC-facing doc store publishes crash-atomically
+  * ([[graft.cdc.LogUpsertSink]]).
   */
 final class PostingIndex private (
     spark: SparkSession,
@@ -1133,7 +1133,7 @@ final class PostingIndex private (
     * are suppressed by the delta fold; replacing or deleting an
     * existing doc is [[upsert]]/[[delete]]). The delta plan runs once
     * (localCheckpoint). Single writer; not crash-atomic (a failed
-    * refresh ⇒ rebuild), unlike the CDC-facing ManifestUpsertSink.
+    * refresh ⇒ rebuild), unlike the CDC-facing LogUpsertSink.
     */
   def refresh(
       newDocs: DataFrame, tokens: Map[String, Column],
@@ -1326,7 +1326,7 @@ final class PostingIndex private (
       fields.map(f => f -> Search.analyzedField(f)).toMap)
 
   /** DELETE-BY-ID without rebuild (right-to-be-forgotten parity with
-    * [[graft.cdc.UpsertSink.delete]] / the LSH index's tombstones):
+    * [[graft.cdc.DocSink.delete]] / the LSH index's tombstones):
     * the ids that currently exist land as one tombstone segment and
     * their stored integer dl sums are subtracted; absent ids are
     * ignored (idempotent). Cost O(|ids| + id buckets + delta log).
@@ -1418,10 +1418,9 @@ final class PostingIndex private (
     * layout serving (the half-written new dirs are debris), a crash
     * after it leaves the new layout serving.
     *
-    * READER SNAPSHOT RETENTION (the [[graft.cdc.ManifestUpsertSink]]
-    * `retainSnapshots` contract applied to the index, VERDICT r11
-    * advisory #2): `retainVersions` (≥ 1) is the number of published
-    * layouts kept on disk INCLUDING the new one, so a reader that
+    * READER SNAPSHOT RETENTION (VERDICT r11 advisory #2):
+    * `retainVersions` (≥ 1) is the number of published layouts kept
+    * on disk INCLUDING the new one, so a reader that
     * opened a pre-compact handle keeps serving — its layout dirs AND
     * the folded segments its fold references are spared by every
     * later maintenance op's sweep — until `retainVersions` newer
@@ -1650,9 +1649,8 @@ object PostingIndex {
     * The input plan executes exactly ONCE — the doc-store write; the
     * stats aggregate AND the postings both derive from the WRITTEN
     * copy, so a nondeterministic input cannot desync stats.json or
-    * the posting lists from the stored docs (the ManifestUpsertSink
-    * staging discipline), and the analyzer never runs a second
-    * corpus pass. Token arrays round-trip parquet exactly, so the
+    * the posting lists from the stored docs, and the analyzer never
+    * runs a second corpus pass. Token arrays round-trip parquet exactly, so the
     * integer dl sums — hence avgdl — still equal what the full-scan
     * referee computes over the in-memory plan.
     */

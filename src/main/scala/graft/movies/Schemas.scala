@@ -113,21 +113,4 @@ object Schemas {
       StructField("imdb_rating", DoubleType)))), nullable = false)))
 
   val Roles: Seq[String] = Seq("actor", "director", "writer")
-
-  // ---- typed faces (Dataset[T] where type safety helps) --------------
-  final case class IdNameT(id: String, name: String)
-  final case class MovieDocT(
-      id: String, imdb_rating: Option[Double], title: String,
-      description: Option[String],
-      actors_names: Seq[String], writers_names: Seq[String],
-      directors_names: Seq[String], genres_names: Seq[String],
-      actors: Seq[IdNameT], writers: Seq[IdNameT],
-      directors: Seq[IdNameT], genres: Seq[IdNameT])
-  final case class PersonDocT(
-      id: String, full_name: String, roles: Seq[String],
-      film_ids: Seq[String])
-  final case class FilmworkRefT(
-      id: String, title: String, imdb_rating: Option[Double])
-  final case class GenreDocT(
-      id: String, name: String, filmworks: Seq[FilmworkRefT])
 }

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * actors_names^4, writers_names^1, directors_names^3.
   *
   * Scoring (documented, ours — ES BM25 exactness is out of scope, SURVEY
-  * §7.3.1): per field, score_f = Σ over distinct analyzed query terms of
-  * tf(term, field); total = Σ_f weight_f * score_f. Docs scoring 0 drop.
+  * §7.3.1): field-weighted BM25F, see [[score]]. Docs scoring 0 drop.
   * Ordering: score desc, then id asc (stable pagination).
   *
   * Scale: the query token array is a literal broadcast into a codegen'd
@@ -34,13 +33,6 @@ object Search {
         array().cast("array<string>"))
   }
 
-  /** tf of each query term in the token array, summed. */
-  private def tfScore(tokens: Column, queryTerms: Seq[String]): Column =
-    if (queryTerms.isEmpty) lit(0L)
-    else queryTerms.map { t =>
-      size(filter(tokens, x => x === lit(t))).cast("long")
-    }.reduce(_ + _)
-
   /** Analyze every searchable field ONCE into a materialized token
     * column (`__toks_<field>`). Both the corpus-stats pass and the
     * scoring pass read these shared columns, so the analyzer (stemmer
@@ -56,26 +48,6 @@ object Search {
 
   private[movies] def dropAnalyzed(df: DataFrame, fields: Seq[String]): DataFrame =
     df.drop(fields.map(f => s"__toks_$f"): _*)
-
-  /** Plain weighted-tf scoring (the first-cut X1 semantics; integer and
-    * oracle-friendly, but long fields with repeated terms out-rank short
-    * exact titles — see [[score]] for the ranking-quality default).
-    */
-  def scoreTf(
-      docs: DataFrame,
-      query: String,
-      weights: Map[String, Int] = DefaultWeights): DataFrame = {
-    val terms = analyzeQuery(docs, query)
-    val fields = weights.keys.toSeq.sorted
-    val total = fields.map { f =>
-      tfScore(toks(f), terms) * lit(weights(f).toLong)
-    }.reduceOption(_ + _).getOrElse(lit(0L))
-    dropAnalyzed(
-      withAnalyzed(docs, fields)
-        .withColumn("score", total.cast("double"))
-        .filter(col("score") > 0),
-      fields)
-  }
 
   private[movies] def analyzeQuery(docs: DataFrame, query: String): Seq[String] =
     docs.sparkSession.range(1)

@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * convention): [[SimilarityOps.retrainIvfPqIndex]] rebuilds into a
   * fresh dir and documents "serve the new dir with THESE", but nothing
   * used to swap serving atomically or retire the old layout. This is
-  * the [[graft.cdc.ManifestUpsertSink]] current-pointer pattern
-  * applied to the vector index:
+  * the current-pointer pattern (one atomically replaced pointer names
+  * the live immutable layout) applied to the vector index:
   *
   *   root/__current.json      the serve pointer ([[JsonSidecar]] —
   *                            atomic overwrite-rename): live layout

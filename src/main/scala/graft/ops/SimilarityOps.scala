@@ -1113,7 +1113,7 @@ object SimilarityOps {
     else df.withColumn(IvfSeqCol, lit(IvfBaseSeq))
 
   /** DELETE from a stored [[ivfPqIndex]] layout (right-to-be-forgotten
-    * parity with [[graft.cdc.UpsertSink.delete]] and the LSH index's
+    * parity with [[graft.cdc.DocSink.delete]] and the LSH index's
     * [[graft.ops.DedupOps.removeFromLshIndex]]): append the ids to a
     * tombstone side table at a fresh op seq — one |request| write, no
     * index rewrite. A deleted vector's rows live in exactly one cell,

@@ -353,7 +353,7 @@ object RelationalQueries {
     // :358-381 sink, in ONE oracle-checked gate): three keyset ticks
     // drive Keyset.nextBatch over events (file-backed CursorStore
     // between ticks, as a restart would), each batch reduces to
-    // latest-per-user and upserts into an UpsertSink store; tick 2 is
+    // latest-per-user and upserts into a LogUpsertSink store; tick 2 is
     // REPLAYED before tick 3 to prove effectively-once (the idempotent
     // upsert absorbs the duplicate delivery). The final store must
     // equal latest-per-user over the first 360 events in (ts, id)
@@ -380,34 +380,43 @@ object RelationalQueries {
         |ORDER BY user_id""".stripMargin) { (s, dir) =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      import graft.cdc.{Keyset, UpsertSink}
+      import graft.cdc.{Keyset, LogUpsertSink}
       val e = t(s, dir, "events")
         .withColumn("did", lpad($"event_id".cast("string"), 12, "0"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_cdc_e2e").toString
-      val store = new UpsertSink(s, s"$tmp/store", "user_id", nBuckets = 8)
-      val cursors = new Keyset.CursorStore(s"$tmp/cursors")
-      val latestInBatch = Window.partitionBy($"user_id")
-        .orderBy(unix_micros($"ts").desc, $"did".desc)
-      def tick(): DataFrame = {
-        val cur = cursors.load("events") // file round-trip = restart-safe
-        val (batch, next) = Keyset.nextBatch(e, "ts", "did", cur, 120)
-        val docs = batch
-          .withColumn("rk", row_number().over(latestInBatch))
-          .filter($"rk" === 1).drop("rk")
-          .graftCheckpoint() // pin the batch: the store must not re-scan
-        store.upsert(docs)
-        cursors.save("events", next)
-        docs
+      val tmp = java.nio.file.Files.createTempDirectory("graft_cdc_e2e")
+      try {
+        val store =
+          new LogUpsertSink(s, s"$tmp/store", "user_id", nBuckets = 8)
+        val cursors = new Keyset.CursorStore(s"$tmp/cursors")
+        val latestInBatch = Window.partitionBy($"user_id")
+          .orderBy(unix_micros($"ts").desc, $"did".desc)
+        def tick(): DataFrame = {
+          val cur = cursors.load("events") // file round-trip = restart-safe
+          val (batch, next) = Keyset.nextBatch(e, "ts", "did", cur, 120)
+          val docs = batch
+            .withColumn("rk", row_number().over(latestInBatch))
+            .filter($"rk" === 1).drop("rk")
+            .graftCheckpoint() // pin the batch: the store must not re-scan
+          store.upsert(docs)
+          cursors.save("events", next)
+          docs
+        }
+        tick()
+        val t2 = tick()
+        store.upsert(t2) // duplicate delivery of tick 2: must be a no-op
+        tick()
+        val out = store.read().get
+          .select($"user_id", $"event_id", $"event_type",
+            cents($"value").as("value_c"), unix_micros($"ts").as("ts_us"))
+          .orderBy($"user_id")
+        // at most one row per user of a 360-event prefix: collected, so
+        // the result outlives the store dir removed below
+        s.createDataFrame(java.util.Arrays.asList(out.collect(): _*),
+          out.schema)
+      } finally {
+        val p = new org.apache.hadoop.fs.Path(tmp.toString)
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
       }
-      tick()
-      val t2 = tick()
-      store.upsert(t2) // duplicate delivery of tick 2: must be a no-op
-      tick()
-      store.read().get
-        .select($"user_id", $"event_id", $"event_type",
-          cents($"value").as("value_c"), unix_micros($"ts").as("ts_us"))
-        .orderBy($"user_id")
     },
 
     // The ES BULK WIRE FORMAT (S5's missing live half, made checkable:

@@ -22,7 +22,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *  - Writes go through `df.write.jdbc`, which batches inserts per
   *    partition (reference's mogrify multi-row INSERT, minus the string
   *    pasting). Idempotent upserts are the sink's job — see
-  *    cdc.UpsertSink / DocSink.
+  *    cdc.DocSink.
   *
   * Tested end-to-end against embedded Apache Derby (the JDBC engine
   * shipped with Spark) in GoldenJdbcSpec — same API binds to

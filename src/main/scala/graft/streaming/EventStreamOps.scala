@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The reference's streaming layer is the CDC poll loop (no windows —
   * SURVEY §2.10 T6); these ops are the engine's general stream surface:
-  * watermarked tumbling/sliding aggregations and custom session state via
+  * watermarked tumbling aggregations and custom session state via
   * flatMapGroupsWithState, both of which scale as key-partitioned state
   * in the Spark state store (RocksDB at production scale).
   */
@@ -27,20 +27,6 @@ object EventStreamOps {
       .select(
         col("window.start").as("window_start"),
         col("event_type"), col("n"), col("total_value"))
-
-  /** Sliding-window distinct-user approximation per type
-    * (approx_count_distinct — sketch-based, bounded state at scale).
-    */
-  def slidingActiveUsers(
-      events: DataFrame,
-      windowDur: String = "10 minutes",
-      slide: String = "5 minutes",
-      watermarkDelay: String = "2 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowDur, slide))
-      .agg(approx_count_distinct("user_id").as("active_users"))
-      .select(col("window.start").as("window_start"), col("active_users"))
 
   final case class Event(
       event_id: Long, user_id: Long, event_type: String,

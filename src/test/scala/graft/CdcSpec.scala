@@ -50,9 +50,9 @@ class CdcSpec extends SparkTestBase {
   }
 
   private def mkSinks(dir: String) = CdcPipeline.Sinks(
-    movies = new UpsertSink(spark, s"$dir/idx_movies", "id", nBuckets = 4),
-    persons = new UpsertSink(spark, s"$dir/idx_persons", "id", nBuckets = 4),
-    genres = new UpsertSink(spark, s"$dir/idx_genres", "id", nBuckets = 4))
+    movies = new LogUpsertSink(spark, s"$dir/idx_movies", "id", nBuckets = 4),
+    persons = new LogUpsertSink(spark, s"$dir/idx_persons", "id", nBuckets = 4),
+    genres = new LogUpsertSink(spark, s"$dir/idx_genres", "id", nBuckets = 4))
 
   test("initial drain indexes everything; arrays populated") {
     val dir = tmp(); seed(dir)
@@ -359,8 +359,8 @@ class CdcSpec extends SparkTestBase {
       shape, s"$dir/search_idx", nTermBuckets = 4, nDocBuckets = 4))
     val sinks = CdcPipeline.Sinks(
       movies = idxSink,
-      persons = new UpsertSink(spark, s"$dir/idx_persons", "id", 4),
-      genres = new UpsertSink(spark, s"$dir/idx_genres", "id", 4))
+      persons = new LogUpsertSink(spark, s"$dir/idx_persons", "id", 4),
+      genres = new LogUpsertSink(spark, s"$dir/idx_genres", "id", 4))
     val cursors = new Keyset.CursorStore(s"$dir/cursors")
     CdcPipeline.drain(spark, t, sinks, cursors, batchSize = 10)
     def hits(q: String) = idxSink.index.score(q)
@@ -429,7 +429,7 @@ class CdcSpec extends SparkTestBase {
       def delete(ids: DataFrame): Unit = ivf.delete(ids)
       def read(): Option[DataFrame] = ivf.read()
     }
-    val docStore = new UpsertSink(spark, s"$dir/doc_store", "id", 4)
+    val docStore = new LogUpsertSink(spark, s"$dir/doc_store", "id", 4)
     val fanout = new DocSink {
       def idCol: String = "id"
       def upsert(docs: DataFrame): Unit = {
@@ -443,8 +443,8 @@ class CdcSpec extends SparkTestBase {
     }
     val sinks = CdcPipeline.Sinks(
       movies = fanout,
-      persons = new UpsertSink(spark, s"$dir/idx_persons", "id", 4),
-      genres = new UpsertSink(spark, s"$dir/idx_genres", "id", 4))
+      persons = new LogUpsertSink(spark, s"$dir/idx_persons", "id", 4),
+      genres = new LogUpsertSink(spark, s"$dir/idx_genres", "id", 4))
     val cursors = new Keyset.CursorStore(s"$dir/cursors")
     CdcPipeline.drain(spark, t, sinks, cursors, batchSize = 10)
     def ivfRows(d: DataFrame) = d
@@ -485,7 +485,7 @@ class CdcSpec extends SparkTestBase {
   }
 
   test("pipeline is sink-agnostic (S5): an in-memory DocSink converges " +
-       "to the same documents as the parquet UpsertSink") {
+       "to the same documents as the parquet LogUpsertSink") {
     // minimal alternative DocSink impl — the shape an ES-backed sink
     // (es.mapping.id) would take; collect() is test-only
     final class MemSink(val idCol: String) extends DocSink {
@@ -526,17 +526,6 @@ class CdcSpec extends SparkTestBase {
     assert(docSet(memSinks.genres) === docSet(parquetSinks.genres))
   }
 
-  test("upsert rewrites only affected buckets") {
-    val dir = tmp()
-    val sink = new UpsertSink(spark, s"$dir/store", "id", nBuckets = 8)
-    sink.upsert(Seq(("a", 1), ("b", 2), ("c", 3)).toDF("id", "v"))
-    val v1 = sink.read().get.orderBy("id").as[(String, Int)].collect()
-    assert(v1 === Array(("a", 1), ("b", 2), ("c", 3)))
-    sink.upsert(Seq(("b", 20), ("d", 4)).toDF("id", "v"))
-    val v2 = sink.read().get.orderBy("id").as[(String, Int)].collect()
-    assert(v2 === Array(("a", 1), ("b", 20), ("c", 3), ("d", 4)))
-  }
-
   test("sink retry absorbs a transient driver-visible fault: first " +
        "attempt throws, second succeeds, store state correct (T8)") {
     import graft.sources.JdbcIO
@@ -555,14 +544,25 @@ class CdcSpec extends SparkTestBase {
       }
       df.withColumn("v", p(col("v")))
     }
-    val sink = new UpsertSink(spark, s"$dir/store", "id", nBuckets = 4,
-      retry = Some(JdbcIO.RetryPolicy(maxAttempts = 3, initialBackoffMs = 1)))
+    // maxAttempts = 2: the ONE retry must itself succeed, so a retry
+    // that tripped the stale-handle check (its own torn attempt read
+    // as a foreign publish) throws out of the op
+    val sink = new LogUpsertSink(spark, s"$dir/store", "id", nBuckets = 4,
+      retry = Some(JdbcIO.RetryPolicy(maxAttempts = 2, initialBackoffMs = 1)))
+    // the log after each op: every seg-* dir carries its _SUCCESS
+    // marker (the failed attempt left no markerless dir behind), and
+    // the retry reused the failed attempt's seq
+    def segs(): Seq[(String, Boolean)] =
+      new java.io.File(s"$dir/store/log").listFiles().toSeq
+        .filter(_.getName.startsWith("seg-")).sortBy(_.getName)
+        .map(d => d.getName -> new java.io.File(d, "_SUCCESS").exists())
     sink.upsert(Seq(("a", 1), ("b", 2)).toDF("id", "v"))
     CdcSpecFault.fired.set(false)
     sink.upsert(poisoned(Seq(("b", 20), ("c", 3)).toDF("id", "v")))
     assert(CdcSpecFault.fired.get, "fault never fired — test is vacuous")
     assert(sink.read().get.orderBy("id").as[(String, Int)].collect() ===
       Array(("a", 1), ("b", 20), ("c", 3)))
+    assert(segs() === Seq("seg-0-u" -> true, "seg-1-u" -> true))
     // delete path retries the same way (poison IS the id column, so it
     // can't be pruned away)
     CdcSpecFault.fired.set(false)
@@ -576,9 +576,18 @@ class CdcSpec extends SparkTestBase {
     assert(CdcSpecFault.fired.get, "delete fault never fired")
     assert(sink.read().get.orderBy("id").as[(String, Int)].collect() ===
       Array(("a", 1), ("c", 3)))
+    assert(segs() ===
+      Seq("seg-0-u" -> true, "seg-1-u" -> true, "seg-2-d" -> true))
+    // the retried ops advanced the handle's stale-handle token to its
+    // own publish: follow-up ops on the same handle still pass (a trip
+    // is deterministic, so the retry policy could not absorb one)
+    sink.upsert(Seq(("d", 4)).toDF("id", "v"))
+    sink.compact()
+    assert(sink.read().get.orderBy("id").as[(String, Int)].collect() ===
+      Array(("a", 1), ("c", 3), ("d", 4)))
     // without a policy the same fault surfaces (retry, not luck)
     CdcSpecFault.fired.set(false)
-    val bare = new UpsertSink(spark, s"$dir/store2", "id", nBuckets = 4)
+    val bare = new LogUpsertSink(spark, s"$dir/store2", "id", nBuckets = 4)
     bare.upsert(Seq(("x", 1)).toDF("id", "v"))
     intercept[Exception] {
       bare.upsert(poisoned(Seq(("y", 2)).toDF("id", "v")))

@@ -52,7 +52,7 @@ class CdcStreamSpec extends SparkTestBase {
       genre = () => spark.read.parquet(s"$dir/genre"),
       personFilmWork = () => spark.read.parquet(s"$dir/person_film_work"),
       genreFilmWork = () => spark.read.parquet(s"$dir/genre_film_work"))
-    val movieSink = new UpsertSink(spark, s"$dir/idx_movies", "id", 4)
+    val movieSink = new LogUpsertSink(spark, s"$dir/idx_movies", "id", 4)
 
     // person.movies process: changed persons → affected film ids →
     // restricted rebuild → idempotent upsert (daemon.py:503-510)
@@ -111,10 +111,10 @@ class CdcStreamSpec extends SparkTestBase {
       .withColumn("did", lpad($"event_id".cast("string"), 12, "0"))
     e.orderBy(unix_micros($"ts").asc, $"did".asc).limit(360)
       .write.parquet(s"$dir/events_prefix")
-    val sink = new UpsertSink(spark, s"$dir/store", "user_id", 4)
-    // the log-structured sink rides the SAME micro-batches (with a
-    // mid-stream compaction) — the flat-cost store must be a drop-in
-    // under real streaming checkpointing too
+    val sink = new LogUpsertSink(spark, s"$dir/store", "user_id", 4)
+    // a second store rides the SAME micro-batches with a mid-stream
+    // compaction — folding the log must not change the store under
+    // real streaming checkpointing either
     val logSink = new LogUpsertSink(spark, s"$dir/logstore", "user_id", 4)
     val latestInBatch = Window.partitionBy($"user_id")
       .orderBy(unix_micros($"ts").desc, $"did".desc)
@@ -142,7 +142,8 @@ class CdcStreamSpec extends SparkTestBase {
     val lcols = logSink.read().get.columns.toIndexedSeq
     assert(logSink.read().get.toJSON.collect().sorted.toSeq ===
       sink.read().get.selectExpr(lcols: _*).toJSON.collect().sorted.toSeq,
-      "log sink must equal the rewrite sink under streaming delivery")
+      "the compacted store must equal the uncompacted one under " +
+        "streaming delivery")
     val streamed = sink.read().get
       .select($"user_id", $"event_id", $"event_type",
         round($"value" * 100, 0).cast("long").as("value_c"),
@@ -152,5 +153,18 @@ class CdcStreamSpec extends SparkTestBase {
     val batchLoop = SparkEntry.queries("q149_cdc_end_to_end")(spark, sfDir)
       .collect().toSeq
     assert(streamed === batchLoop)
+  }
+
+  test("q149 gate removes its store and cursor dir, and its result " +
+       "still reads after the removal") {
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def e2eDirs(): Set[String] = tmpRoot.listFiles().map(_.getName)
+      .filter(_.startsWith("graft_cdc_e2e")).toSet
+    val before = e2eDirs()
+    val out = SparkEntry.queries("q149_cdc_end_to_end")(spark, sfDir)
+    assert(e2eDirs() === before, "the gate left its temp dir behind")
+    val rows = out.collect()
+    assert(rows.nonEmpty)
+    assert(out.collect().toSeq === rows.toSeq)
   }
 }

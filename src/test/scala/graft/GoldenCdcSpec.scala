@@ -40,9 +40,9 @@ class GoldenCdcSpec extends SparkTestBase {
       personFilmWork = () => spark.read.parquet(s"$dir/person_film_work"),
       genreFilmWork = () => spark.read.parquet(s"$dir/genre_film_work"))
     val sinks = CdcPipeline.Sinks(
-      movies = new UpsertSink(spark, s"$dir/idx_movies", "id", 16),
-      persons = new UpsertSink(spark, s"$dir/idx_persons", "id", 16),
-      genres = new UpsertSink(spark, s"$dir/idx_genres", "id", 16))
+      movies = new LogUpsertSink(spark, s"$dir/idx_movies", "id", 16),
+      persons = new LogUpsertSink(spark, s"$dir/idx_persons", "id", 16),
+      genres = new LogUpsertSink(spark, s"$dir/idx_genres", "id", 16))
     CdcPipeline.drain(spark, tables, sinks,
       new Keyset.CursorStore(s"$dir/cursors"), batchSize = 300)
 

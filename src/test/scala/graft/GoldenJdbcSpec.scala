@@ -8,9 +8,12 @@ import graft.sources.{JdbcIO, SqliteFile}
 
 /** S1/S2/S4 end-to-end over REAL external storage:
   *
-  *  1. [[SqliteFile]] reads the reference's actual db.sqlite (b-tree
-  *     pages, overflow chains, rowid aliasing) — validated row-for-row
-  *     against the independently-exported JSONL fixtures.
+  *  1. [[SqliteFile]] reads `legacy/db.sqlite` (b-tree pages, overflow
+  *     chains, rowid aliasing) — validated row-for-row against the JSONL
+  *     export of the reference's legacy tables. SQLite itself wrote the
+  *     file from those rows with the legacy DDL
+  *     (`tools/make_sqlite_fixtures.py`), so the suite needs nothing
+  *     outside the repo.
   *  2. The legacy tables round-trip through a real JDBC engine
   *     (embedded Apache Derby, shipped with Spark): write.jdbc →
   *     read.jdbc (partitioned for the numeric-keyed table) →
@@ -23,7 +26,7 @@ import graft.sources.{JdbcIO, SqliteFile}
   */
 class GoldenJdbcSpec extends SparkTestBase {
 
-  private val SqlitePath = "/root/reference/sqlite_to_postgresql/db.sqlite"
+  private val SqlitePath = getClass.getResource("/legacy/db.sqlite").getPath
 
   private val LegacySchemas = Map(
     "movies" -> Schemas.LegacyMovies,

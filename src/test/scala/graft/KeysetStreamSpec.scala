@@ -100,13 +100,13 @@ class KeysetStreamSpec extends SparkTestBase {
        "semantics under the real engine trigger; reference restart " +
        "behavior daemon.py:104-126)") {
     import org.apache.spark.sql.functions.col
-    import graft.cdc.UpsertSink
+    import graft.cdc.LogUpsertSink
     val dir = Files.createTempDirectory("graft_ks_kill").toString + "/t"
     val ckpt = Files.createTempDirectory("graft_ks_kill_ckpt").toString
     val storeDir = Files.createTempDirectory("graft_ks_kill_store").toString
     val rows = (1 to 9).map(i => (f"r$i%02d", s"v$i", ts(100L * i)))
     rows.toDF("id", "title", "updated_at").write.parquet(dir)
-    val store = new UpsertSink(spark, s"$storeDir/s", "id", nBuckets = 4)
+    val store = new LogUpsertSink(spark, s"$storeDir/s", "id", nBuckets = 4)
 
     // crash injection: the SECOND micro-batch upserts only its first row,
     // then dies — a partial sink write, the worst restart case. armed is

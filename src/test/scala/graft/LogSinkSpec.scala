@@ -5,11 +5,11 @@ import org.apache.spark.sql.DataFrame
 import graft.cdc.LogUpsertSink
 
 /** [[graft.cdc.LogUpsertSink]] — the O(|batch|)-per-tick doc store.
-  * Drills the full [[graft.cdc.DocSink]] contract (the ManifestSinkSpec
-  * drill), compaction equivalence and sweep, crash-marker handling, the
-  * CdcPipeline drop-in equality, AND the property the bucketed-rewrite
-  * sinks cannot give: an upsert is exactly ONE job that never reads the
-  * store, so per-tick cost is flat in store size.
+  * Drills the full [[graft.cdc.DocSink]] contract, compaction
+  * equivalence and sweep, crash-marker handling, CdcPipeline drain ≡
+  * full rebuild, AND the property a bucketed-rewrite store cannot give:
+  * an upsert is exactly ONE job that never reads the store, so
+  * per-tick cost is flat in store size.
   */
 class LogSinkSpec extends SparkTestBase {
   import spark.implicits._
@@ -29,8 +29,7 @@ class LogSinkSpec extends SparkTestBase {
   }
 
   test("upsert-by-id contract: insert, replace, replay no-op (content), " +
-       "targeted + total delete, absent-store semantics — the " +
-       "ManifestSinkSpec drill") {
+       "targeted + total delete, absent-store semantics") {
     val dir = tmp()
     val sink = new LogUpsertSink(spark, dir, "id", nBuckets = 4)
     assert(sink.read() === None)
@@ -55,9 +54,8 @@ class LogSinkSpec extends SparkTestBase {
     sink.upsert(docs("a" -> "back"))
     assert(state(sink) === expect.filterNot(_._1 == "a") + ("a" -> "back"))
     // total tombstoning: read() reports None even BEFORE compaction
-    // (parity with the rewrite sinks' emptied stores — read().isDefined
-    // means 'has docs' across the family); compaction then collapses
-    // the store to ABSENT (the sink-family invariant)
+    // (read().isDefined means 'has docs'); compaction then collapses
+    // the store to ABSENT (empty store == no store)
     sink.delete(Seq("a", "b", "c", "d").toDF("id"))
     assert(sink.read() === None)
     sink.compact()
@@ -200,9 +198,86 @@ class LogSinkSpec extends SparkTestBase {
     assert(state(sink).contains("k1" -> "fresh"))
   }
 
-  test("drop-in DocSink: CdcPipeline drain over log sinks matches the " +
-       "dynamic-overwrite sinks' final index state — before AND after " +
-       "compaction") {
+  test("EMPTY batches are no-ops, not crashes: an empty upsert or " +
+       "delete leaves an absent store absent and adds no segment to a " +
+       "live one") {
+    val dir = tmp()
+    val sink = new LogUpsertSink(spark, dir, "id", nBuckets = 4)
+    sink.upsert(docs()) // empty upsert on an ABSENT store
+    sink.delete(Seq.empty[String].toDF("id"))
+    assert(sink.read() === None)
+    assert(entries(dir, "log").isEmpty, "an empty batch wrote a segment")
+    sink.upsert(docs("a" -> "one")) // the next real upsert bootstraps
+    val log = entries(dir, "log")
+    assert(log === Set("seg-0-u"))
+    sink.upsert(docs()) // empty upsert on a live store
+    sink.delete(Seq.empty[String].toDF("id"))
+    assert(entries(dir, "log") === log)
+    assert(state(sink) === Set("a" -> "one"))
+    sink.compact()
+    assert(state(sink) === Set("a" -> "one"))
+  }
+
+  test("reserved sink columns (__seq, __op, bucket) are refused before " +
+       "anything is written") {
+    import org.apache.spark.sql.functions.lit
+    val dir = tmp()
+    val sink = new LogUpsertSink(spark, dir, "id", nBuckets = 4)
+    for (c <- Seq("__seq", "__op", "bucket")) {
+      val e = intercept[IllegalArgumentException] {
+        sink.upsert(docs("a" -> "one").withColumn(c, lit(1)))
+      }
+      assert(e.getMessage.contains("reserved sink columns"), c)
+      assert(sink.read() === None, s"a batch with '$c' reached the store")
+      assert(entries(dir, "log").isEmpty)
+    }
+    sink.upsert(docs("a" -> "one"))
+    assert(state(sink) === Set("a" -> "one"))
+  }
+
+  test("delete over a compacted base: tombstones hide base docs, and " +
+       "the next compact folds them out of the base") {
+    val dir = tmp()
+    val sink = new LogUpsertSink(spark, dir, "id", nBuckets = 4)
+    sink.upsert(docs("a" -> "one", "b" -> "two", "c" -> "three"))
+    sink.compact()
+    assert(entries(dir, "log").isEmpty, "store is base-only")
+    // the store's docs live only in the base: the delete must still
+    // count it as present and write its tombstone
+    sink.delete(Seq("b").toDF("id"))
+    assert(entries(dir, "log").count(_.endsWith("-d")) === 1)
+    assert(state(sink) === Set("a" -> "one", "c" -> "three"))
+    sink.compact()
+    assert(entries(dir, "log").isEmpty)
+    assert(entries(dir).count(_.startsWith("base-")) === 1)
+    assert(state(sink) === Set("a" -> "one", "c" -> "three"))
+    sink.delete(Seq("a", "c").toDF("id"))
+    assert(sink.read() === None, "every base doc tombstoned")
+    sink.compact()
+    assert(!new java.io.File(dir).exists(), "emptied store fully collapses")
+  }
+
+  test("nondeterministic input plan: the batch is evaluated once, so " +
+       "every read and the compacted base serve that one evaluation") {
+    import org.apache.spark.sql.functions.{concat, lit, rand}
+    val dir = tmp()
+    val sink = new LogUpsertSink(spark, dir, "id", nBuckets = 8)
+    // ids depend on rand(): every evaluation of this plan yields a
+    // DIFFERENT id set
+    val volatile = spark.range(64)
+      .select(concat(lit("id_"), (rand() * 1e9).cast("long")).as("id"),
+        lit("v").as("title"))
+    sink.upsert(volatile)
+    val first = state(sink)
+    assert(first.size === 64)
+    assert(state(sink) === first, "a second read saw another evaluation")
+    sink.compact()
+    assert(state(sink) === first, "compaction saw another evaluation")
+  }
+
+  test("drop-in DocSink: CdcPipeline drain over log sinks matches a " +
+       "full rebuild of the movies, persons and genres docs — before " +
+       "AND after compaction") {
     import java.sql.Timestamp
     import graft.cdc._
     def ts(s: Long) = new Timestamp(s * 1000)
@@ -227,27 +302,24 @@ class LogSinkSpec extends SparkTestBase {
       genre = () => spark.read.parquet(s"$src/genre"),
       personFilmWork = () => spark.read.parquet(s"$src/person_film_work"),
       genreFilmWork = () => spark.read.parquet(s"$src/genre_film_work"))
-    val a = tmp(); val b = tmp()
-    val overwriteSinks = CdcPipeline.Sinks(
-      movies = new UpsertSink(spark, s"$a/m", "id", nBuckets = 4),
-      persons = new UpsertSink(spark, s"$a/p", "id", nBuckets = 4),
-      genres = new UpsertSink(spark, s"$a/g", "id", nBuckets = 4))
+    val b = tmp()
     val logSinks = CdcPipeline.Sinks(
       movies = new LogUpsertSink(spark, s"$b/m", "id", nBuckets = 4),
       persons = new LogUpsertSink(spark, s"$b/p", "id", nBuckets = 4),
       genres = new LogUpsertSink(spark, s"$b/g", "id", nBuckets = 4))
-    CdcPipeline.drain(spark, t, overwriteSinks,
-      new Keyset.CursorStore(s"$a/cursors"), batchSize = 1)
     CdcPipeline.drain(spark, t, logSinks,
       new Keyset.CursorStore(s"$b/cursors"), batchSize = 1)
+    val rebuilt = Seq(
+      logSinks.movies -> graft.movies.Docs.movieDocs(t.filmWork(),
+        t.person(), t.genre(), t.personFilmWork(), t.genreFilmWork()),
+      logSinks.persons ->
+        graft.movies.Docs.personDocs(t.person(), t.personFilmWork()),
+      logSinks.genres -> graft.movies.Docs.genreDocs(t.genre(),
+        t.filmWork(), t.genreFilmWork()))
     def check(): Unit =
-      for ((x, y) <- Seq(
-          (overwriteSinks.movies, logSinks.movies),
-          (overwriteSinks.persons, logSinks.persons),
-          (overwriteSinks.genres, logSinks.genres))) {
-        val xs = x.read().get.toJSON.collect().sorted.toSeq
-        val ys = y.read().get
-          .selectExpr(x.read().get.columns.toIndexedSeq: _*)
+      for ((sink, want) <- rebuilt) {
+        val xs = want.toJSON.collect().sorted.toSeq
+        val ys = sink.read().get.selectExpr(want.columns.toIndexedSeq: _*)
           .toJSON.collect().sorted.toSeq
         assert(ys === xs)
       }

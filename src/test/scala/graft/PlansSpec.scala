@@ -825,17 +825,12 @@ class PlansSpec extends SparkTestBase {
       // the corpus remains downstream of the pin
       val p = out.queryExecution.executedPlan.toString
       assert(!p.contains("FileScan"), p)
-      // listener delivery is async: poll for the pin plan carrying the
-      // pruned scans + the touched-id broadcast anti-join
-      def anyCaptured(re: scala.util.matching.Regex): Boolean = {
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (System.nanoTime() < deadline) {
-          if (captured.asScala.exists(s => re.findFirstIn(s).isDefined))
-            return true
-          Thread.sleep(50)
-        }
-        false
-      }
+      // listener delivery is async: flush the bus once, then look for
+      // the pin plan carrying the pruned scans + the touched-id
+      // broadcast anti-join
+      org.apache.spark.GraftListenerBusBridge.waitUntilEmpty(spark.sparkContext)
+      def anyCaptured(re: scala.util.matching.Regex): Boolean =
+        captured.asScala.exists(s => re.findFirstIn(s).isDefined)
       def dump() = captured.asScala.mkString("\n--- captured plan ---\n")
       assert(anyCaptured("PartitionFilters: \\[[^\\]]*__db".r), dump())
       assert(anyCaptured("PartitionFilters: \\[[^\\]]*__tb".r), dump())

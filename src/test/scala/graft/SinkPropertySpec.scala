@@ -2,19 +2,19 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
-import graft.cdc.{DocSink, LogUpsertSink, ManifestUpsertSink, UpsertSink}
+import graft.cdc.{DocSink, LogUpsertSink}
 
 /** Differential property drill over the WHOLE parquet sink family:
   * seeded-random sequences of upsert / targeted-delete / replay /
-  * compact against all four stores at once, each step compared to an
+  * compact against every store at once, each step compared to an
   * in-memory Map model (the DocSink contract is exactly last-write-wins
-  * by id). The four sinks implement the same contract through four
-  * different storage disciplines (dynamic overwrite, snapshot-commit,
-  * log-structured, and the round-11 SEARCH-INDEX face whose store IS
-  * an updatable PostingIndex) — a divergence in ANY of replace
-  * semantics, delete idempotence, replay absorption, empty-batch
-  * handling or compaction equivalence shows up as a model mismatch
-  * here without hand-writing the case.
+  * by id). The sinks implement the same contract through different
+  * storage disciplines (the log-structured doc store, the round-11
+  * SEARCH-INDEX face whose store IS an updatable PostingIndex, and the
+  * IVF×PQ vector index) — a divergence in ANY of replace semantics,
+  * delete idempotence, replay absorption, empty-batch handling or
+  * compaction equivalence shows up as a model mismatch here without
+  * hand-writing the case.
   */
 class SinkPropertySpec extends SparkTestBase {
   import spark.implicits._
@@ -29,8 +29,8 @@ class SinkPropertySpec extends SparkTestBase {
     s.read().map(_.as[(String, String)].collect().toSet)
       .getOrElse(Set.empty)
 
-  test("random op sequences: UpsertSink ≡ ManifestUpsertSink ≡ " +
-       "LogUpsertSink ≡ the in-memory model at every checkpoint, " +
+  test("random op sequences: LogUpsertSink ≡ PostingIndexSink ≡ " +
+       "IvfPqIndexSink ≡ the in-memory model at every checkpoint, " +
        "including replays, empty batches, hot-id churn and compaction") {
     val rnd = new scala.util.Random(20260815L)
     val ids = (1 to 12).map(i => s"id_$i")
@@ -39,21 +39,15 @@ class SinkPropertySpec extends SparkTestBase {
       val pidxTokens = Map("title" ->
         org.apache.spark.sql.functions.split(
           org.apache.spark.sql.functions.col("title"), "\\s+"))
-      val sinks: Seq[DocSink] = Seq(
-        new UpsertSink(spark, s"${tmp()}/s", "id", nBuckets = 4),
-        new ManifestUpsertSink(spark, s"${tmp()}/s", "id",
-          nBuckets = 4, retainSnapshots = 2),
-        new LogUpsertSink(spark, s"${tmp()}/s", "id", nBuckets = 4),
-        new graft.movies.PostingIndexSink(
-          graft.movies.PostingIndex.buildTokenized(
-            df(Seq.empty).limit(0), s"${tmp()}/s", pidxTokens,
-            Map("title" -> 1), idCol = "id",
-            nTermBuckets = 4, nDocBuckets = 4),
-          tokens = Some(pidxTokens)))
-      val log = sinks.collectFirst { case l: LogUpsertSink => l }.get
-      val pidx = sinks.collectFirst {
-        case p: graft.movies.PostingIndexSink => p }.get
-      // FIFTH leg (VERDICT r12 #3): the vector-index DocSink. Its
+      val log = new LogUpsertSink(spark, s"${tmp()}/s", "id", nBuckets = 4)
+      val pidx = new graft.movies.PostingIndexSink(
+        graft.movies.PostingIndex.buildTokenized(
+          df(Seq.empty).limit(0), s"${tmp()}/s", pidxTokens,
+          Map("title" -> 1), idCol = "id",
+          nTermBuckets = 4, nDocBuckets = 4),
+        tokens = Some(pidxTokens))
+      val sinks: Seq[DocSink] = Seq(log, pidx)
+      // the vector-index leg (VERDICT r12 #3): the IvfPqIndexSink's
       // docs carry an embedding derived deterministically from the
       // payload (a changed title genuinely moves the vector, the q294
       // re-embedding pattern), and its store is compared against a
@@ -107,7 +101,7 @@ class SinkPropertySpec extends SparkTestBase {
             sinks.foreach(_.upsert(df(lastBatch)))
             ivf.upsert(embed(df(lastBatch)))
             lastBatch.foreach { case (k, v) => model(k) = v }
-          case 4 => // fold the deferring stores; the others have none
+          case 4 => // fold every store
             log.compact(); pidx.compact(); ivf.compact()
         }
         if (step % 4 == 0) check(s"step $step")
@@ -142,44 +136,30 @@ class SinkPropertySpec extends SparkTestBase {
   }
 
   test("stale-writer tripwire (VERDICT r11 #5): a SUPERSEDED " +
-       "LogUpsertSink / ManifestUpsertSink handle refuses every " +
-       "mutating op once a newer writer advanced the store, while a " +
-       "re-opened handle resumes normally — the PostingIndex " +
-       "requireCurrent contract on the sink family") {
-    val mks: Seq[(String, String => DocSink)] = Seq(
-      ("log", d => new LogUpsertSink(spark, d, "id", nBuckets = 4)),
-      ("manifest", d => new ManifestUpsertSink(spark, d, "id",
-        nBuckets = 4, retainSnapshots = 2)))
-    for ((label, mk) <- mks) {
-      val d = s"${tmp()}/s"
-      val h1 = mk(d)
-      h1.upsert(df(Seq("a" -> "v1")))
-      // a restart re-opens the store: the new handle snapshots the
-      // current version and becomes the single writer
-      val h2 = mk(d)
-      h2.upsert(df(Seq("b" -> "v2")))
-      // the superseded handle must trip on EVERY mutating op — its
-      // publish would supersede or orphan h2's commits
-      for (op <- Seq(
-          () => h1.upsert(df(Seq("a" -> "v3"))),
-          () => h1.delete(Seq("a").toDF("id")))) {
-        val err = intercept[IllegalArgumentException](op())
-        assert(err.getMessage.contains("stale sink handle"), label)
-      }
-      // the store is uncorrupted and the live writer keeps going
-      h2.upsert(df(Seq("c" -> "v4")))
-      assert(contents(h2) ===
-        Set("a" -> "v1", "b" -> "v2", "c" -> "v4"), label)
-    }
-    // LogUpsertSink.compact is a mutating op too (it sweeps segments)
+       "LogUpsertSink handle refuses every mutating op once a newer " +
+       "writer advanced the store, while a re-opened handle resumes " +
+       "normally — the PostingIndex requireCurrent contract on the " +
+       "sink family") {
     val d = s"${tmp()}/s"
-    val l1 = new LogUpsertSink(spark, d, "id", nBuckets = 4)
-    l1.upsert(df(Seq("a" -> "v1")))
-    val l2 = new LogUpsertSink(spark, d, "id", nBuckets = 4)
-    l2.upsert(df(Seq("b" -> "v2")))
-    val err = intercept[IllegalArgumentException](l1.compact())
-    assert(err.getMessage.contains("stale sink handle"))
-    l2.compact()
-    assert(contents(l2) === Set("a" -> "v1", "b" -> "v2"))
+    val h1 = new LogUpsertSink(spark, d, "id", nBuckets = 4)
+    h1.upsert(df(Seq("a" -> "v1")))
+    // a restart re-opens the store: the new handle snapshots the
+    // current version and becomes the single writer
+    val h2 = new LogUpsertSink(spark, d, "id", nBuckets = 4)
+    h2.upsert(df(Seq("b" -> "v2")))
+    // the superseded handle must trip on EVERY mutating op — its
+    // publish or sweep would supersede h2's segments (compact sweeps)
+    for (op <- Seq(
+        () => h1.upsert(df(Seq("a" -> "v3"))),
+        () => h1.delete(Seq("a").toDF("id")),
+        () => h1.compact())) {
+      val err = intercept[IllegalArgumentException](op())
+      assert(err.getMessage.contains("stale sink handle"))
+    }
+    // the store is uncorrupted and the live writer keeps going
+    h2.upsert(df(Seq("c" -> "v4")))
+    assert(contents(h2) === Set("a" -> "v1", "b" -> "v2", "c" -> "v4"))
+    h2.compact()
+    assert(contents(h2) === Set("a" -> "v1", "b" -> "v2", "c" -> "v4"))
   }
 }

@@ -221,24 +221,7 @@ class WriterRaceSpec extends SparkTestBase {
       staleHandle.upsert(df("e" -> "v1"))
     }
     assert(seqErr.getMessage.contains("stale sink handle"))
-    // the same preventive layer rides ManifestUpsertSink (one lease
-    // implementation for the sink family)
-    val mdir = tmp() + "/mstore"
-    val mLease = WriterLease.acquire(spark, mdir, "writer-M")
-    val msink = new graft.cdc.ManifestUpsertSink(spark, mdir, "id",
-      nBuckets = 4, lease = Some(mLease))
-    msink.upsert(df("m" -> "v1"))
-    val mErr = intercept[IllegalArgumentException] {
-      WriterLease.acquire(spark, mdir, "writer-N")
-    }
-    assert(mErr.getMessage.contains("held by 'writer-M'"))
-    mLease.release()
-    WriterLease.acquire(spark, mdir, "writer-N")
-    val heldErr2 = intercept[IllegalArgumentException] {
-      msink.upsert(df("n" -> "v1"))
-    }
-    assert(heldErr2.getMessage.contains("superseded"))
-    // ...and the two INDEX sink faces gate on the same lease: a
+    // the two INDEX sink faces gate on the same lease: a
     // superseded writer's op aborts BEFORE any segment/tombstone write
     val pdir = tmp() + "/pidx"
     val tokens2 = Map("title" -> split($"title", "\\s+"))
