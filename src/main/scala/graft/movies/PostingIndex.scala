@@ -3,7 +3,8 @@ package graft.movies
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType,
+  MapType, StringType, StructField, StructType}
 import graft.ops.Checkpointer._
 
 /** Inverted-index search serving: BM25F over a CANDIDATE set found by a
@@ -38,15 +39,27 @@ import graft.ops.Checkpointer._
   *                           version (compacts publish docs-<v>/
   *                           postings-<v> pairs through this file)
   *
-  * Query path: terms route to posting buckets (driver holds ≤ |terms|
-  * hashes), candidate ids come off the pruned posting scan, candidate
-  * id-buckets (≤ nDocBuckets, a bounded collect) prune the docs scan,
-  * superseded/tombstoned base versions drop via a broadcast anti-join
-  * on the delta's touched ids, current delta docs join in, and
-  * [[Search.bm25f]] — the same expression as the full-scan faces,
-  * with the same stats — scores only the current candidates. Ranks
-  * are bit-identical to [[Search.score]] (MoviesSpec asserts it);
-  * PlansSpec asserts both scans carry partition filters.
+  * Query path: the query is analyzed and its terms routed to posting
+  * buckets on the driver (no Spark job). ONE aggregate over two legs
+  * then yields each term's exact df and the candidate doc-buckets:
+  * the `__tb`-pruned base postings (`term IN (...)` pushed to the
+  * scan) minus the delta log's touched ids (broadcast anti-join), and
+  * the current delta docs' distinct terms. The candidate doc-buckets
+  * (≤ nDocBuckets) prune the docs scan, which semi-joins the
+  * postings' ids (empty log) or anti-joins the touched ids (live
+  * log), the current delta docs join in, and [[Search.bm25f]] — the
+  * same expression as the full-scan faces, with the same stats —
+  * scores them. Ranks are bit-identical to [[Search.score]]
+  * (MoviesSpec asserts it); PlansSpec asserts both scans carry
+  * partition filters and bounds the serve's Spark jobs.
+  *
+  * A handle is immutable (seq window, layout version, live segments),
+  * so every read derives the delta fold — touched ids and current
+  * delta docs — once per handle and pins it; the layout facts and
+  * the base footer schema are likewise read once per handle. A pin
+  * is never unpersisted by the index: a reader may still hold an old
+  * handle, and Spark's ContextCleaner reclaims the pin once the
+  * handle is unreachable.
   *
   * ==Maintenance (the CDC steady state: daemon.py:358-381 upserts a
   * re-denormalized doc, ES serves the UPDATE ~1 s later)==
@@ -145,6 +158,23 @@ final class PostingIndex private (
   private def readBase(): DataFrame =
     spark.read.schema(baseSchema).parquet(docsPath)
 
+  /** The postings and df side-table schemas, fixed per handle so every
+    * read of them skips inference (an inferring read launches a footer
+    * job per call). Both stores are written from fixed expressions —
+    * (id, term) and (term, df), partitioned by `__tb` — so their
+    * schemas follow from the base footer's id field, with no footer
+    * read of their own.
+    */
+  private lazy val postingsSchema: StructType = StructType(Seq(
+    baseSchema(idCol), StructField("term", StringType),
+    StructField(TermBucketCol, IntegerType)))
+  private lazy val dfStatsSchema: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("df", LongType),
+    StructField(TermBucketCol, IntegerType)))
+
+  private def readPostings(): DataFrame =
+    spark.read.schema(postingsSchema).parquet(postingsPath)
+
   private def fs = new Path(dir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -163,7 +193,7 @@ final class PostingIndex private (
     * every query path must detect it and serve empty instead of
     * throwing at the scan.
     */
-  private def hasPostings: Boolean = {
+  private lazy val hasPostings: Boolean = {
     val p = new Path(postingsPath)
     fs.exists(p) && fs.listStatus(p)
       .exists(_.getPath.getName.startsWith(s"$TermBucketCol="))
@@ -176,7 +206,7 @@ final class PostingIndex private (
     * so [[upsert]] can bootstrap an empty index with an ordinary
     * crash-safe segment.
     */
-  private def baseIsPlaceholder: Boolean =
+  private lazy val baseIsPlaceholder: Boolean =
     !fs.listStatus(new Path(docsPath))
       .exists(_.getPath.getName.startsWith(s"$DocBucketCol="))
 
@@ -274,21 +304,43 @@ final class PostingIndex private (
 
   /** The delta log's CURRENT docs: latest version per id across the
     * live segments, tombstones dropped — analyzed rows in
-    * [[analyzedCols]] order. The [[graft.cdc.Snapshot.latestPerKey]]
-    * fold on `__seq`.
+    * [[analyzedCols]] order.
     */
   private def currentDeltaDocs(segs: Seq[Seg]): Option[DataFrame] =
     if (segs.isEmpty) None
-    else Some(currentDeltaOf(deltaAll(segs)))
+    else Some(liveOf(latestOf(deltaAll(segs))))
 
-  /** The latest-per-id live-doc fold of an already-read delta frame —
-    * shared so a caller that PINNED [[deltaAll]] (the maintained top-k
-    * serve) folds the same way the per-call path does.
+  /** The latest row per id of a delta frame, tombstones kept — the
+    * [[graft.cdc.Snapshot.latestPerKey]] fold on `__seq`. One row per
+    * touched id.
     */
-  private def currentDeltaOf(delta: DataFrame): DataFrame =
+  private def latestOf(delta: DataFrame): DataFrame =
     graft.cdc.Snapshot.latestPerKey(delta, idCol, SeqCol, SeqCol)
-      .filter(col(OpCol) === "u")
-      .select(analyzedCols: _*)
+
+  /** The upserted (live) docs of a [[latestOf]] fold. */
+  private def liveOf(latest: DataFrame): DataFrame =
+    latest.filter(col(OpCol) === "u").select(analyzedCols: _*)
+
+  /** The handle's delta fold, derived ONCE and pinned: one row per
+    * touched id (its latest version, tombstones kept). Every read face
+    * takes its touched ids and current delta docs from here instead of
+    * re-listing, re-reading and re-folding the log per call — the
+    * handle's seq window never moves, and the segments inside it are
+    * immutable (a compact's sweep spares them while the layout is
+    * retained). None ⇔ empty log. Maintenance ops keep their own reads
+    * of the log.
+    */
+  private lazy val pinnedFold: Option[DataFrame] = {
+    val segs = liveSegs()
+    if (segs.isEmpty) None
+    else Some(latestOf(deltaAll(segs)).graftCheckpoint())
+  }
+
+  /** Touched ids off the pin (already distinct: one fold row per id). */
+  private def pinnedTouched: Option[DataFrame] =
+    pinnedFold.map(_.select(col(idCol)))
+
+  private def pinnedLive: Option[DataFrame] = pinnedFold.map(liveOf)
 
   /** The stored CURRENT versions of `ids` (callers pin `ids`): the
     * pruned base read minus delta-touched ids, plus the delta log's
@@ -345,20 +397,11 @@ final class PostingIndex private (
     }
   }
 
-  /** Per-term document counts over an analyzed doc view — ONE bounded
-    * aggregate (≤ |terms| sums). Shared by the maintained serve's
-    * df-within-candidates fold and the top-k face's delta-log df
-    * corrections, so the two paths cannot drift: this is
-    * [[termDfsSigned]] with every row contributing +1.
-    */
-  private def termDfsOver(
-      docs: DataFrame, terms: Seq[String]): Map[String, Long] =
-    termDfsSigned(docs.withColumn("__sign", lit(1L)), terms)
-
-  /** Signed variant of [[termDfsOver]]: each row contributes its
-    * `__sign` column instead of 1 — the top-k maintained-df correction
-    * folds its subtract leg (base versions of touched ids, sign −1)
-    * and add leg (current delta docs, sign +1) into ONE bounded job.
+  /** Signed per-term document counts over an analyzed doc view — ONE
+    * bounded aggregate (≤ |terms| sums), each row contributing its
+    * `__sign`: the top-k maintained-df correction folds its subtract
+    * leg (base versions of touched ids, sign −1) and add leg (current
+    * delta docs, sign +1) into one job.
     */
   private def termDfsSigned(
       docs: DataFrame, terms: Seq[String]): Map[String, Long] = {
@@ -373,60 +416,50 @@ final class PostingIndex private (
     }.toMap
   }
 
-  /** The whole CURRENT corpus (base minus touched, plus delta fold) —
-    * the browse/compaction view. O(base + delta log).
+  /** The whole CURRENT corpus (base minus touched, plus the current
+    * delta docs) — the browse/compaction view. O(base + delta log).
     */
-  private def currentDocsView(segs: Seq[Seg]): DataFrame = {
+  private def currentDocsView(
+      touched: Option[DataFrame], live: Option[DataFrame]): DataFrame = {
     val base0 = readBase().select(analyzedCols: _*)
-    val base = touchedIds(segs).fold(base0)(t =>
+    val base = touched.fold(base0)(t =>
       base0.join(broadcast(t), Seq(idCol), "left_anti"))
-    currentDeltaDocs(segs).fold(base)(base.unionByName(_))
+    live.fold(base)(base.unionByName(_))
   }
 
   // ------------------------------------------------------ candidates
 
-  /** One tiny driver job (the [[Search.analyzeQuery]] pattern) maps
-    * each term to its posting bucket with the ENGINE's own hash — the
-    * routing function cannot drift from the layout's.
+  /** Maps each term to its posting bucket with the ENGINE's own hash
+    * — the routing function cannot drift from the layout's — over a
+    * local relation that Catalyst folds on the driver (the
+    * [[Search.analyzeQuery]] pattern: no Spark job); the bucket ids
+    * dedupe on the driver too.
     */
   private def termBuckets(terms: Seq[String]): Seq[Int] = {
     import spark.implicits._
     terms.toDF("t")
       .select(pmod(xxhash64(col("t")), lit(nTermBuckets)).cast("int"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+      .collect().map(_.getInt(0)).distinct.toSeq
   }
 
   /** The pruned, folded, CURRENT candidate docs for a term set
     * (`termsDf`: one `term` column): every current doc containing ≥ 1
     * of the terms, with analyzed token columns attached — exactly the
-    * rows a rebuilt index's posting lists would name, so df counted
-    * over this set integer-equals a rebuild's posting counts. Base
-    * candidates come off the `tbBuckets`-pruned posting scan
-    * (superseded/tombstoned versions anti-joined out); delta
-    * candidates come from the folded log's own token arrays (the log
-    * is small by the compaction contract — no delta postings needed).
-    * None ⇔ no candidates anywhere.
+    * rows a rebuilt index's posting lists would name. Base candidates
+    * come off the `tbBuckets`-pruned posting scan (superseded/
+    * tombstoned versions anti-joined out by the handle's pinned touched
+    * ids); delta candidates come from the pinned fold's own token
+    * arrays (the log is small by the compaction contract — no delta
+    * postings needed). None ⇔ no candidates anywhere. Serves the
+    * batched and top-k faces.
     */
   private def candidateDocs(
-      termsDf: DataFrame, tbBuckets: Seq[Int],
-      segs: Seq[Seg]): Option[DataFrame] =
-    candidateDocsFrom(termsDf, tbBuckets,
-      touchedIds(segs), currentDeltaDocs(segs))
-
-  /** [[candidateDocs]] over pre-derived delta views — the maintained
-    * top-k serve pins [[deltaAll]] once and passes its touched-id and
-    * live-doc folds here, instead of re-reading the K-segment
-    * mergeSchema log per driver action (the write-path O(K²) class
-    * ADVICE r12 #2 removed, kept off the read path too).
-    */
-  private def candidateDocsFrom(
-      termsDf: DataFrame, tbBuckets: Seq[Int],
-      touched: Option[DataFrame],
-      cur: Option[DataFrame]): Option[DataFrame] = {
+      termsDf: DataFrame, tbBuckets: Seq[Int]): Option[DataFrame] = {
+    val touched = pinnedTouched
     val base: Option[DataFrame] =
       if (!hasPostings || tbBuckets.isEmpty) None
       else {
-        val posts = spark.read.parquet(postingsPath)
+        val posts = readPostings()
           .filter(col(TermBucketCol).isin(tbBuckets: _*))
           .join(termsDf, Seq("term"), "left_semi")
         // pin the candidate ID SET (ids only — bounded by the terms'
@@ -451,7 +484,7 @@ final class PostingIndex private (
             pruned.join(broadcast(t), Seq(idCol), "left_anti")))
         }
       }
-    val deltaCand: Option[DataFrame] = cur.map { c =>
+    val deltaCand: Option[DataFrame] = pinnedLive.map { c =>
       val matching = c
         .select(col(idCol), explode(array_distinct(
           concat(fields.map(Search.toks): _*))).as("term"))
@@ -474,10 +507,19 @@ final class PostingIndex private (
     * `Search.score(corpus, query)` at posting-join cost.
     */
   def score(query: String): DataFrame =
-    scoreTerms(Search.analyzeQuery(spark.range(1).toDF(), query))
+    scoreTerms(Search.analyzeQuery(spark, query))
 
   /** Same, for callers that tokenized the query themselves (the
     * oracle-gate face uses whitespace terms, no stemmer).
+    *
+    * One aggregate, then one candidate fetch (the class doc's query
+    * path). Its df is exact: base postings hold the DISTINCT (term,
+    * id) pairs of the base layout, so the two legs count every current
+    * doc containing t once — integer-equal to a rebuild's posting-list
+    * length (the MoviesSpec maintained-vs-rebuild drills check it). An
+    * empty log drops the delta legs and returns the lazy frame; a
+    * maintained result is pinned, so the caller's action reads it
+    * instead of re-running the fetch.
     *
     * COST BOUND (honest cap, measured in IndexMaintBench's
     * `posting_df` rows): the candidate set is the union of the query
@@ -491,76 +533,52 @@ final class PostingIndex private (
   def scoreTerms(terms0: Seq[String]): DataFrame = {
     val terms = terms0.distinct
     if (terms.isEmpty || nDocs == 0L) return emptyScored()
-    val segs = liveSegs()
-    if (!hasPostings && segs.isEmpty) return emptyScored()
-    if (segs.isEmpty) return scoreTermsImmutable(terms)
-    import spark.implicits._
-    candidateDocs(terms.toDF("term"), termBuckets(terms), segs) match {
-      case None => emptyScored()
-      case Some(cand0) =>
-        // Pin the folded candidate set ONCE (guide §2.4, fewer
-        // driver-sequenced evaluations): the df aggregate below and
-        // the caller's consuming action would otherwise each re-run
-        // the whole candidate plan — pruned posting scan, pruned doc
-        // fetch, delta fold, anti-join — i.e. the serve's dominant
-        // subtree evaluated twice per call. The pin holds exactly the
-        // serve's own working set (cost O(candidates), the documented
-        // bound of this face); stopword-grade terms belong on
-        // [[scoreTermsTopK]] either way.
-        val cand = cand0.graftCheckpoint()
-        // df per term from the folded CURRENT candidates (one bounded
-        // aggregate — every doc containing t is a candidate, so the
-        // count within candidates IS the corpus df, integer-equal to
-        // a rebuild's posting-list lengths)
-        val dfs = termDfsOver(cand, terms)
-        if (dfs.values.forall(_ == 0L)) emptyScored()
-        else cand
-          .withColumn("score",
-            Search.bm25f(terms, fields, weights, avgdls, dfs,
-              nDocs.toDouble))
-          .filter(col("score") > 0)
-          .select(outCols: _*)
-    }
-  }
-
-  /** The EMPTY-LOG fast path (fresh build / post-compact — the steady
-    * serving state): df comes straight off the pruned posting scan
-    * (posting count == document frequency, since postings hold
-    * DISTINCT (term, doc) pairs of exactly the current corpus) and
-    * the literal `term IN (...)` keeps parquet row-group pushdown on
-    * the posting scan. Integer-identical to the maintained path's
-    * candidate-fold df — the MoviesSpec maintained-vs-rebuild drills
-    * cross the two paths on every query, so they cannot drift.
-    */
-  private def scoreTermsImmutable(terms: Seq[String]): DataFrame = {
-    val posts = spark.read.parquet(postingsPath)
-      .filter(col(TermBucketCol).isin(termBuckets(terms): _*) &&
-        col("term").isin(terms: _*))
-    // df per term AND the candidate id-buckets off ONE aggregate job
-    // over the pruned posting scan (guide §2.4 — previously two
-    // separate collect actions scanned it twice): df = the term's
-    // posting-row count as before; the bucket set is the union of the
-    // per-term collect_set's, each bounded by nDocBuckets, so the
-    // collected payload stays ≤ |terms| × nDocBuckets ints.
-    val statRows = posts.groupBy(col("term")).agg(
-        count(lit(1)).as("df"),
+    val basePairs: Option[DataFrame] =
+      if (!hasPostings) None
+      else {
+        val posts = readPostings()
+          .filter(col(TermBucketCol).isin(termBuckets(terms): _*) &&
+            col("term").isin(terms: _*))
+          .select(col("term"), col(idCol))
+        Some(pinnedTouched.fold(posts)(t =>
+          posts.join(broadcast(t), Seq(idCol), "left_anti")))
+      }
+    val deltaPairs: Option[DataFrame] = pinnedLive.map(_
+      .select(col(idCol), explode(array_distinct(
+        concat(fields.map(Search.toks): _*))).as("term"))
+      .filter(col("term").isin(terms: _*)))
+    val legs = basePairs.toSeq ++ deltaPairs.toSeq
+    if (legs.isEmpty) return emptyScored()
+    // df and doc-buckets per term: the collected payload stays
+    // ≤ |terms| × nDocBuckets ints (a delta doc's bucket rides along —
+    // its base rows there are anti-joined or score 0)
+    val statRows = legs.reduce(_ unionByName _)
+      .groupBy(col("term"))
+      .agg(count(lit(1)).as("df"),
         collect_set(pmod(xxhash64(col(idCol)), lit(nDocBuckets))
           .cast("int")).as("bks"))
       .collect()
     val dfs = statRows.map(r => r.getString(0) -> r.getLong(1)).toMap
     if (dfs.isEmpty) return emptyScored()
-    val candidates = posts.select(col(idCol)).distinct()
-    // candidate id-buckets: bounded by nDocBuckets, prunes the doc scan
-    val candBuckets = statRows
-      .flatMap(_.getSeq[Int](2)).distinct.toSeq
-    val pruned = readBase()
-      .filter(col(DocBucketCol).isin(candBuckets: _*))
-      .join(candidates, Seq(idCol), "left_semi")
-    pruned
+    val candBuckets = statRows.flatMap(_.getSeq[Int](2)).distinct.toSeq
+    // the candidate fetch: bucket-pruned docs semi-joined to the
+    // postings' ids; with a log, the touched ids' broadcast anti-join
+    // replaces the semi-join (whose side would broadcast them a second
+    // time) and a doc holding no query term scores 0 and drops below
+    val baseCand = basePairs.map { p =>
+      val pruned = readBase().filter(col(DocBucketCol).isin(candBuckets: _*))
+      pinnedTouched
+        .fold(pruned.join(p.select(col(idCol)), Seq(idCol), "left_semi"))(
+          t => pruned.join(broadcast(t), Seq(idCol), "left_anti"))
+        .select(analyzedCols: _*)
+    }
+    val scored = (baseCand.toSeq ++ pinnedLive.toSeq)
+      .reduce(_ unionByName _)
       .withColumn("score",
         Search.bm25f(terms, fields, weights, avgdls, dfs, nDocs.toDouble))
       .filter(col("score") > 0)
       .select(outCols: _*)
+    if (pinnedFold.isEmpty) scored else scored.graftCheckpoint()
   }
 
   /** The layout's (term, df) side table exists — written by build and
@@ -571,7 +589,7 @@ final class PostingIndex private (
     * then falls back to the exact full path until the next
     * build/compact writes one.
     */
-  private def hasDfStats: Boolean = {
+  private lazy val hasDfStats: Boolean = {
     val p = new Path(dfstatsPath)
     fs.exists(p) && fs.listStatus(p)
       .exists(_.getPath.getName.startsWith(s"$TermBucketCol="))
@@ -590,7 +608,7 @@ final class PostingIndex private (
     */
   private def readDfStats(terms: Seq[String]): Map[String, Long] = {
     import spark.implicits._
-    spark.read.parquet(dfstatsPath)
+    spark.read.schema(dfStatsSchema).parquet(dfstatsPath)
       .filter(col(TermBucketCol).isin(termBuckets(terms): _*) &&
         col("term").isin(terms: _*))
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
@@ -598,46 +616,33 @@ final class PostingIndex private (
       .as[(String, Long)].collect().toMap
   }
 
-  /** Exact dfs for a term set over the CURRENT corpus, with the delta
-    * log pinned once: the vocab-sized side table (exact for the base
-    * layout) plus exact integer corrections derived from the live log
-    * — df_current(t) = df_base(t) − |touched ids' BASE versions ∋ t|
+  /** Exact dfs for a term set over the CURRENT corpus: the vocab-sized
+    * side table (exact for the base layout) plus exact integer
+    * corrections derived from the handle's pinned delta fold —
+    * df_current(t) = df_base(t) − |touched ids' BASE versions ∋ t|
     * + |current delta docs ∋ t|, both legs ONE signed bounded
     * aggregate. Shared by the single and batched top-k faces so the
-    * df discipline cannot drift between them; returns the pinned
-    * touched-id / live-doc folds for the caller's candidate fetch
-    * (the K-segment mergeSchema log is read ONCE per serve, not per
-    * driver action — the O(K)-opens class ADVICE r12 #2 removed from
-    * the write path, kept off the read path too).
+    * df discipline cannot drift between them.
     */
-  private def pinnedDfs(
-      terms: Seq[String], segs: Seq[Seg])
-      : (Map[String, Long], Option[DataFrame], Option[DataFrame]) = {
+  private def pinnedDfs(terms: Seq[String]): Map[String, Long] = {
     val dfsBase = terms.map(t => t -> 0L).toMap ++ readDfStats(terms)
-    val deltaPinned: Option[DataFrame] =
-      if (segs.isEmpty) None
-      else Some(deltaAll(segs).graftCheckpoint())
-    val touchedPinned = deltaPinned.map(_.select(col(idCol)).distinct())
-    val curPinned = deltaPinned.map(currentDeltaOf)
-    val dfs: Map[String, Long] =
-      if (segs.isEmpty) dfsBase
-      else {
-        // base versions of touched ids count −1, current delta docs
-        // count +1 (the union is bounded by touched-buckets + |log|)
-        val corr = termDfsSigned(
-          baseVersionsOf(touchedPinned.get).withColumn("__sign", lit(-1L))
-            .unionByName(curPinned.get.withColumn("__sign", lit(1L))),
-          terms)
-        terms.map { t =>
-          val d = dfsBase(t) + corr(t)
-          require(d >= 0L,
-            s"maintained df for '$t' went negative ($d = ${dfsBase(t)} " +
-              s"+ ${corr(t)}) — dfstats/base/delta drift; rebuild the " +
-              "index")
-          t -> d
-        }.toMap
-      }
-    (dfs, touchedPinned, curPinned)
+    pinnedFold.fold(dfsBase) { fold =>
+      // base versions of touched ids count −1, current delta docs
+      // count +1 (the union is bounded by touched-buckets + |log|)
+      val corr = termDfsSigned(
+        baseVersionsOf(fold.select(col(idCol)))
+          .withColumn("__sign", lit(-1L))
+          .unionByName(liveOf(fold).withColumn("__sign", lit(1L))),
+        terms)
+      terms.map { t =>
+        val d = dfsBase(t) + corr(t)
+        require(d >= 0L,
+          s"maintained df for '$t' went negative ($d = ${dfsBase(t)} " +
+            s"+ ${corr(t)}) — dfstats/base/delta drift; rebuild the " +
+            "index")
+        t -> d
+      }.toMap
+    }
   }
 
   /** TOP-K serving with MAX-SCORE pruning (VERDICT r11 #3 — the
@@ -694,7 +699,6 @@ final class PostingIndex private (
         false)
     if (terms.isEmpty || nDocs == 0L) return fallback()
     if (!hasPostings || !hasDfStats) return fallback()
-    val segs = liveSegs()
     // dfs: the vocab-sized side table (exact for the BASE layout) plus
     // EXACT integer corrections for the query's terms from the live
     // delta log — the VERDICT r12 #1 maintained-state path. The
@@ -707,7 +711,7 @@ final class PostingIndex private (
     // no per-op side-table mutation to keep crash-consistent with the
     // segment publish (a torn op's segment is ignored by the seq
     // window, and these corrections read exactly the published window).
-    val (dfs, touchedPinned, curPinned) = pinnedDfs(terms, segs)
+    val dfs = pinnedDfs(terms)
     val present = terms.filter(dfs(_) > 0L)
     if (present.isEmpty) return (emptyScored(), false)
     // selective vs stopword-grade split; idf of every present term is
@@ -729,17 +733,16 @@ final class PostingIndex private (
     // Search.bm25f expression and integers as the full path, so
     // surviving scores are bit-identical to it
     val docsOfOpt: Option[DataFrame] =
-      if (segs.nonEmpty) {
+      if (pinnedFold.isDefined) {
         // MAINTAINED layout: the serve's own candidate fold restricted
         // to the selective terms — base candidates off their pruned
         // postings (touched ids anti-joined out) ∪ delta docs matching
         // a selective term. Every current doc containing a selective
         // term is in here, which is all the safety argument needs.
         import spark.implicits._
-        candidateDocsFrom(selective.toDF("term"), termBuckets(selective),
-          touchedPinned, curPinned)
+        candidateDocs(selective.toDF("term"), termBuckets(selective))
       } else {
-        val posts = spark.read.parquet(postingsPath)
+        val posts = readPostings()
           .filter(col(TermBucketCol).isin(termBuckets(selective): _*) &&
             col("term").isin(selective: _*))
         // driver-small candidate sets fetch by PUSHED id literals: the
@@ -822,8 +825,7 @@ final class PostingIndex private (
     require(!docCols.contains(queryIdCol),
       s"query id column '$queryIdCol' collides with a doc column — " +
         "both sides appear in the output")
-    val segs = liveSegs()
-    if (nDocs == 0L || (!hasPostings && segs.isEmpty))
+    if (nDocs == 0L || (!hasPostings && pinnedFold.isEmpty))
       return emptyScoredMulti(queries, queryIdCol)
     // PIN the analyzed query batch: the plan below references it from
     // the routing collect, the posting semi-join, the candidate set
@@ -851,10 +853,10 @@ final class PostingIndex private (
     // scan — integer-identical df, cheaper scan (the MoviesSpec
     // maintained-vs-rebuild drills cross the two paths per query)
     val pairsAndCand: Option[(DataFrame, DataFrame)] =
-      if (segs.isEmpty) {
+      if (pinnedFold.isEmpty) {
         if (!hasPostings) None
         else {
-          val posts = spark.read.parquet(postingsPath)
+          val posts = readPostings()
             .filter(col(TermBucketCol).isin(tb: _*))
             .join(batchTerms, Seq("term"), "left_semi")
           val candidates = posts.select(col(idCol)).distinct()
@@ -870,7 +872,7 @@ final class PostingIndex private (
               .join(candidates, Seq(idCol), "left_semi")
               .select(analyzedCols: _*)))
         }
-      } else candidateDocs(batchTerms, tb, segs).map { cand =>
+      } else candidateDocs(batchTerms, tb).map { cand =>
         (cand.select(col(idCol), explode(array_distinct(
             concat(fields.map(Search.toks): _*))).as("term"))
           .join(batchTerms, Seq("term"), "left_semi"), cand)
@@ -1018,7 +1020,6 @@ final class PostingIndex private (
         .filter(col("rank") <= k)
     def fallbackAll() = (exactFor(queries), Set.empty[Any])
     if (nDocs == 0L || !hasPostings || !hasDfStats) return fallbackAll()
-    val segs = liveSegs()
     // pinned (query, term) pairs — the multi face's rule — and the
     // ONE driver collect that powers classification (bounded by the
     // caller's batch, like the multi face's idf collect)
@@ -1043,7 +1044,7 @@ final class PostingIndex private (
     val vocab = perQuery.values.flatten.toSeq.distinct
     // exact dfs: side table + the maintained-log corrections — the
     // SAME pinnedDfs the single top-k face uses
-    val (dfs, touchedPinned, curPinned) = pinnedDfs(vocab, segs)
+    val dfs = pinnedDfs(vocab)
     // classify per query on the driver
     def selectiveOf(ts: Seq[String]): (Seq[String], Seq[String]) =
       ts.filter(dfs(_) > 0L).partition(t => 2L * dfs(t) <= nDocs)
@@ -1059,9 +1060,8 @@ final class PostingIndex private (
       .flatMap(ts => selectiveOf(ts)._1).toSeq.distinct
     // phase 2: ONE batched job over the union of the prunable
     // queries' selective candidates (immutable: pruned postings;
-    // maintained: the serve's fold — candidateDocsFrom handles both)
-    candidateDocsFrom(selTerms.toDF("term"), termBuckets(selTerms),
-      touchedPinned, curPinned) match {
+    // maintained: the serve's fold — candidateDocs handles both)
+    candidateDocs(selTerms.toDF("term"), termBuckets(selTerms)) match {
       case None => fallbackAll()
       case Some(cand) =>
         // phase 2 folds the PRUNABLE queries only (ADVICE r13 low:
@@ -1452,7 +1452,8 @@ final class PostingIndex private (
     // the staged write READS the old base + delta (both untouched
     // until after the publish) and derives postings + stats from its
     // own written copy — the buildTokenized staging discipline
-    val m2 = PostingIndex.writeLayout(spark, currentDocsView(segs),
+    val m2 = PostingIndex.writeLayout(spark,
+      currentDocsView(touchedIds(segs), currentDeltaDocs(segs)),
       s"$dir/docs-$newV", s"$dir/postings-$newV", s"$dir/dfstats-$newV",
       fields, weights, idCol, docCols,
       nTermBuckets, nDocBuckets,
@@ -1480,10 +1481,10 @@ final class PostingIndex private (
 
   /** The current doc payloads (base minus superseded/tombstoned ids,
     * plus the delta log's live versions) — the store/browse view,
-    * O(base + delta log).
+    * O(base + delta log), folding the log through the handle's pin.
     */
   def currentDocs: DataFrame =
-    currentDocsView(liveSegs()).select(docCols.map(col): _*)
+    currentDocsView(pinnedTouched, pinnedLive).select(docCols.map(col): _*)
 
   /** Full search-API semantics over the pruned path ([[Search.search]]
     * contract). query = None is a pure browse: no posting work, the
@@ -1505,8 +1506,7 @@ final class PostingIndex private (
         s"tie-break); this index's idCol is '$idCol' — use scoreTerms*")
     Search.validateSearchArgs(sortField, page, limit)
     val base = query.fold(
-      currentDocsView(liveSegs()).select(docCols.map(col): _*)
-        .withColumn("score", lit(0.0)).select(outCols: _*))(score)
+      currentDocs.withColumn("score", lit(0.0)).select(outCols: _*))(score)
     Search.orderAndPage(base, query.isDefined, sortField, asc, page, limit)
   }
 
@@ -1526,8 +1526,7 @@ final class PostingIndex private (
         s"tie-break); this index's idCol is '$idCol' — use scoreTerms*")
     Search.validateSearchArgs(sortField, page = 1, limit = limit)
     val base = query.fold(
-      currentDocsView(liveSegs()).select(docCols.map(col): _*)
-        .withColumn("score", lit(0.0)).select(outCols: _*))(score)
+      currentDocs.withColumn("score", lit(0.0)).select(outCols: _*))(score)
     Search.searchAfterScored(base, query.isDefined, sortField, asc,
       limit, after)
   }

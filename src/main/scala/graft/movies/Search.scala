@@ -1,6 +1,6 @@
 package graft.movies
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Weighted multi-field full-text search over movie docs — our engine's
@@ -49,10 +49,17 @@ object Search {
   private[movies] def dropAnalyzed(df: DataFrame, fields: Seq[String]): DataFrame =
     df.drop(fields.map(f => s"__toks_$f"): _*)
 
-  private[movies] def analyzeQuery(docs: DataFrame, query: String): Seq[String] =
-    docs.sparkSession.range(1)
-      .select(Analyzer.analyze(lit(query)).as("t"))
+  /** The query's distinct analyzed terms, evaluated on the driver: the
+    * analyzer runs over a one-row local relation, which Catalyst folds
+    * into a local result, so analyzing a query launches no Spark job.
+    * Every search face analyzes through here.
+    */
+  private[movies] def analyzeQuery(
+      spark: SparkSession, query: String): Seq[String] = {
+    import spark.implicits._
+    Seq(query).toDF("q").select(Analyzer.analyze(col("q")))
       .head().getSeq[String](0).distinct
+  }
 
   // the BM25F constants, shared with PostingIndex's batched face so a
   // constant change cannot silently desync the two score expressions
@@ -83,7 +90,7 @@ object Search {
       docs: DataFrame,
       query: String,
       weights: Map[String, Int] = DefaultWeights): DataFrame = {
-    val terms = analyzeQuery(docs, query)
+    val terms = analyzeQuery(docs.sparkSession, query)
     if (terms.isEmpty)
       return docs.withColumn("score", lit(0.0)).filter(col("score") > 0)
     val fields = weights.keys.toSeq.sorted
@@ -158,6 +165,10 @@ object Search {
     require(Seq("id", "title", "imdb_rating").contains(sortField),
       s"unsupported sort field: $sortField")
     require(page > 0 && limit > 0, "page/limit must be positive")
+    // the page's end row in Long: Int arithmetic wraps for deep pages,
+    // and Spark rejects an offset + limit above Int.MaxValue
+    require(page.toLong * limit <= Int.MaxValue,
+      s"page * limit = ${page.toLong * limit} exceeds ${Int.MaxValue}")
   }
 
   /** The search API's total order + offset pagination, shared by every
@@ -176,7 +187,7 @@ object Search {
     val ordered =
       if (hasQuery) base.orderBy(col("score").desc, sortCol, col("id").asc)
       else base.orderBy(sortCol, col("id").asc)
-    ordered.offset((page - 1) * limit).limit(limit)
+    ordered.offset(((page - 1).toLong * limit).toInt).limit(limit)
   }
 
   /** Deep-pagination cursor: the last row of a page, as (score — only

@@ -64,7 +64,7 @@ final class SearchIndex private (
     * dropped.
     */
   def score(query: String): DataFrame = {
-    val terms = Search.analyzeQuery(analyzed, query)
+    val terms = Search.analyzeQuery(analyzed.sparkSession, query)
     if (terms.isEmpty || nDocs == 0L)
       return Search.dropAnalyzed(analyzed, fields)
         .withColumn("score", lit(0.0)).filter(col("score") > 0)

@@ -160,6 +160,37 @@ class MoviesSpec extends SparkTestBase {
     assert((page1 ++ page2).distinct.length === 3)
   }
 
+  test("search API: a page whose rows lie past Int.MaxValue is rejected " +
+       "(the 422 contract) on every face — never a wrapped offset " +
+       "serving the wrong rows") {
+    val docs = Docs.movieDocs(norm.filmWork, norm.person, norm.genre,
+      norm.personFilmWork, norm.genreFilmWork).localCheckpoint()
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_pidx_deep").toString
+    val idx = PostingIndex.build(docs, dir,
+      nTermBuckets = 4, nDocBuckets = 4)
+    val sidx = SearchIndex.build(docs)
+    // (page - 1) * limit wraps to 4 in Int for the first; the second
+    // wraps negative; the third's offset fits but offset + limit does not
+    for {
+      (page, limit) <- Seq((85899347, 50), (50000000, 50), (42949673, 50))
+      q <- Seq(None, Some("star wars"))
+    } {
+      intercept[IllegalArgumentException] {
+        Search.search(docs, q, page = page, limit = limit)
+      }
+      intercept[IllegalArgumentException] {
+        sidx.search(q, page = page, limit = limit)
+      }
+      intercept[IllegalArgumentException] {
+        idx.search(q, page = page, limit = limit)
+      }
+    }
+    // the deepest page that fits still serves (empty past the corpus)
+    assert(Search.search(docs, None, page = 42949672, limit = 50)
+      .collect().isEmpty)
+  }
+
   test("SearchIndex: repeated searches reuse the hoisted corpus stats " +
        "(no per-query stats aggregate) and rank identically to the " +
        "one-shot scorer") {
@@ -793,6 +824,48 @@ class MoviesSpec extends SparkTestBase {
             Search.searchAfter(corpus, q, sf, asc, limit = 1, after = c)),
         s"searchAfter walk (query=$q, sort=$sf, asc=$asc)")
     }
+  }
+
+  test("PostingIndex read pins are per-handle snapshots: a handle that " +
+       "served keeps its pages through later upserts, deletes and a " +
+       "compact; later handles serve the current docs, and a handle " +
+       "first read after the compact still folds its retained segments") {
+    val docs = Docs.movieDocs(norm.filmWork, norm.person, norm.genre,
+      norm.personFilmWork, norm.genreFilmWork).localCheckpoint()
+    def freshDir() = java.nio.file.Files
+      .createTempDirectory("graft_pidx_pin").toString
+    val m1v2 = docs.filter($"id" === "m1")
+      .withColumn("title", lit("Renamed Saga")).localCheckpoint()
+    // h1: maintained (m3 arrives as a segment), so serving pins its fold
+    val h1 = PostingIndex.build(docs.filter($"id" =!= "m3"), freshDir(),
+        nTermBuckets = 4, nDocBuckets = 4)
+      .upsert(docs.filter($"id" === "m3"))
+    val requests = Seq(
+      (Some("film"), "id", true), (Some("star wars"), "imdb_rating", false),
+      (Some("renamed saga"), "id", true), (None, "title", true))
+    def pages(serve: (Option[String], String, Boolean, Int) =>
+        org.apache.spark.sql.DataFrame): Seq[Seq[(String, Double)]] =
+      for ((q, sf, asc) <- requests; page <- Seq(1, 2))
+        yield serve(q, sf, asc, page).select($"id", $"score")
+          .as[(String, Double)].collect().toSeq
+    def viaIndex(idx: PostingIndex) =
+      pages((q, sf, asc, p) => idx.search(q, sf, asc, p, limit = 2))
+    def ids(ps: Seq[Seq[(String, Double)]]) = ps.map(_.map(_._1))
+    def viaScan(corpus: org.apache.spark.sql.DataFrame) = ids(
+      pages((q, sf, asc, p) => Search.search(corpus, q, sf, asc, p, 2)))
+    val h1Pages = viaIndex(h1)
+    // the writer moves on: m1 replaced and m2 deleted (→ h2), then a
+    // compact with the default retention (→ h3); h2 is first read
+    // only after the compact
+    val h2 = h1.upsert(m1v2).delete(Seq("m2").toDF("id"))
+    val h3 = h2.compact()
+    val current = docs.filter(!$"id".isin("m1", "m2")).unionByName(m1v2)
+    assert(viaIndex(h1) === h1Pages, "h1's pages moved under its pin")
+    assert(h1Pages === viaIndex(PostingIndex.build(docs, freshDir(),
+      nTermBuckets = 4, nDocBuckets = 4)), "h1 ≢ a rebuild over its docs")
+    assert(ids(viaIndex(h2)) === viaScan(current),
+      "h2 first read after the compact")
+    assert(ids(viaIndex(h3)) === viaScan(current), "h3 (compacted)")
   }
 
   test("PostingIndex.scoreTermsMulti: one batch, zero per-query jobs' " +

@@ -839,6 +839,48 @@ class PlansSpec extends SparkTestBase {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("posting-search job budget: PostingIndex.search(Some(q)) runs " +
+       "≤ 5 Spark jobs on a fresh empty-log handle, ≤ 10 for the first " +
+       "query on a fresh maintained handle (which pins its delta fold) " +
+       "and ≤ 6 for a warm query on it") {
+    import graft.movies.PostingIndex
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_pidx_budget").toString
+    val corpus = (1 to 100).map(i =>
+      (f"doc_$i%03d", s"filler common words row $i" +
+        (if (i % 10 == 0) " needle" else ""))).toDF("id", "title")
+    val built = PostingIndex.build(corpus, dir,
+      weights = Map("title" -> 1), nTermBuckets = 8, nDocBuckets = 8)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // jobs of one served page, the listener bus flushed on both sides
+    def jobsOf(idx: PostingIndex, q: String): Int = {
+      org.apache.spark.GraftListenerBusBridge.waitUntilEmpty(spark.sparkContext)
+      jobs.set(0)
+      assert(idx.search(Some(q), limit = 5).collect().nonEmpty, q)
+      org.apache.spark.GraftListenerBusBridge.waitUntilEmpty(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val empty = jobsOf(built, "needle")
+      val maintained = built
+        .upsert(Seq(("doc_010", "now plain"), ("doc_101", "fresh needle row"))
+          .toDF("id", "title"))
+        .delete(Seq("doc_020").toDF("id"))
+      val first = jobsOf(maintained, "needle")
+      val warm = jobsOf(maintained, "needle row")
+      assert(empty <= 5, s"empty-log search ran $empty jobs")
+      assert(first <= 10, s"first maintained search ran $first jobs")
+      assert(warm <= 6, s"warm maintained search ran $warm jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("pruned deep-pagination page shape: PostingIndex.searchAfter " +
        "browse pages plan as filter + TakeOrderedAndProject over the " +
        "current view — never a global Sort") {
